@@ -20,14 +20,16 @@ number of independent chains a builder has — never data-sized.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from typing import Any, Callable
 
 
 def build_concurrently(*thunks: Callable[[], Any]) -> list[Any]:
     """Run the given zero-arg builder thunks on driver threads and
-    return their results in argument order. Exceptions propagate (the
-    first failing thunk's error, after all threads finish submitting).
+    return their results in argument order. The first thunk to fail
+    raises its error as soon as it fails: the others are not waited
+    for (a running thunk cannot be interrupted; it finishes in the
+    background and its result is dropped).
 
     py4j's ClientServer gives each Python thread its own JVM
     connection, and Spark job properties (description, group) are
@@ -36,6 +38,13 @@ def build_concurrently(*thunks: Callable[[], Any]) -> list[Any]:
     """
     if len(thunks) == 1:
         return [thunks[0]()]
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+    pool = ThreadPoolExecutor(max_workers=len(thunks))
+    try:
         futures = [pool.submit(t) for t in thunks]
+        wait(futures, return_when=FIRST_EXCEPTION)
+        for f in futures:
+            if f.done() and f.exception() is not None:
+                raise f.exception()
         return [f.result() for f in futures]
+    finally:
+        pool.shutdown(wait=False)

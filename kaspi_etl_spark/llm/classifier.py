@@ -105,7 +105,7 @@ def _z_scores(feats: DataFrame, weights: list[int], id_col: str) -> DataFrame:
     """(id, z) margin per doc: groupBy-sum of x * w with the constant
     weight array indexed by feature — no join; the weight vector is
     plan-constant."""
-    w_arr = array_lit([int(w) for w in weights], "bigint")
+    w_arr = array_lit([int(w) for w in weights], "bigint", cache=False)
     return feats.select(
         id_col,
         (
@@ -139,9 +139,6 @@ def train(
     gradient collect (bounded, the k-means read class)."""
     feats = doc_features(docs, id_col, text_col)
     lab = doc_labels(docs, label_expr, id_col)
-    n = lab.count()
-    if n == 0:
-        raise ValueError("empty corpus")
     # Co-partition ONCE and keep the partitioning METADATA alive:
     # persist() (not localCheckpoint — an RDD scan erases
     # outputPartitioning and every iteration re-shuffled the full
@@ -155,14 +152,23 @@ def train(
     # 100 TB shape: per-iteration network is O(D), not O(corpus).
     # Explicit numPartitions so AQE does not coalesce the partitioning
     # away before the persist.
+    #
+    # The join is NULL-safe so that one action both materializes the
+    # frame and counts the docs: every distinct id, NULL included, has
+    # exactly one bias row. The NULL-id group so counts in n, as a
+    # doc_labels row, but adds nothing to the gradient, whose join on
+    # the id drops it.
     parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     base = (
-        feats.join(lab, id_col)
+        feats.join(lab, feats[id_col].eqNullSafe(lab[id_col]))
+        .select(feats[id_col], "j", "x", "y")
         .repartition(parts, id_col)
         .persist()
     )
-    base.count()  # materialize before the loop
     try:
+        n = base.agg(F.count_if(F.col("j") == LR_D)).collect()[0][0]
+        if n == 0:
+            raise ValueError("empty corpus")
         weights = [0] * (LR_D + 1)
         den = (1 << (LR_P - LR_S)) * LR_DEN * n
         for _ in range(iters):

@@ -16,6 +16,8 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -151,10 +153,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
 # dominant map-side cost, so this is an 8-16x saving. Constants are fixed
 # odd multipliers/offsets (any SQL oracle can mirror the arithmetic).
 MINHASH_PRIME = 2147483647  # 2^31 - 1
-
-# Sentinel for "no previous convergence sum yet" — None is a real value
-# here (SQL SUM over an empty label frame), so it cannot be the sentinel.
-_UNSET = object()
 
 # Process-wide caches of pure expression trees (the litcache discipline:
 # EXPRESSIONS, never data or results). Keyed by the integer params that
@@ -618,92 +616,89 @@ def connected_components(pairs: DataFrame, max_iterations: int = 10) -> DataFram
     id reachable from it — the canonical representative of its dedup
     cluster.
 
-    Iterative min-label propagation: each round every vertex takes the
-    min of its own label and its neighbors' labels; stop when no label
-    changes. Near-dup clusters are dense (close to cliques), so this
-    converges in 2-3 rounds. Each round is two broadcast-free equi-joins
-    + one agg, and the frame is localCheckpoint()ed to cut the growing
-    lineage — the standard Spark shape for iterative graph algorithms
-    without GraphFrames.
+    Iterative min-label propagation: each hop every vertex takes the
+    min of its own label and its neighbors' labels. Each hop is one
+    equi-join + one agg, and each round's frame is localCheckpoint()ed
+    to cut the growing lineage — the standard Spark shape for iterative
+    graph algorithms without GraphFrames.
 
-    Min-label propagation advances one hop per round, so a chain-shaped
+    Convergence is a fixpoint test that needs no history: labels are
+    final when no edge joins two different labels. It runs first on
+    the hop-1 labels, before any propagation round — near-dup clusters
+    are close to cliques, so most inputs stop there. Each later round
+    runs two hops (driver-job latency, not data, dominates a round) and
+    tests the labels between them inside the second hop, so the test
+    adds one narrow scan of the round's checkpoint and no join.
+
+    Min-label propagation moves a label one edge per hop, so a chain-shaped
     component of diameter > max_iterations defeats it; rather than
     return silently wrong clusters, the loop hands the edge set to
     `connected_components_star` (O(log n) rounds, below) when the
-    budget runs out. r12: hops run in PAIRS per checkpoint/convergence
-    check (driver-job latency, not data, dominates a round); the loop
-    allows at least max_iterations + 2 hops, so a graph that needs
-    exactly max_iterations hops IS converged inside the budget and the
-    final pair is the no-change verification.
+    budget runs out. The last round tests the labels of hop
+    max_iterations + 3 or later, so a graph that needs exactly
+    max_iterations hops converges well inside the budget.
     """
-    # Materialize the edge list once — it is consumed every iteration,
-    # and without the checkpoint each round would recompute the entire
+    # Materialize the edge list once — it is consumed every hop, and
+    # without the checkpoint each round would recompute the entire
     # upstream pair pipeline (the expensive part). Self-loops make every
-    # vertex its own neighbor, so one join+agg per round covers both the
-    # neighbor minimum AND keeping isolated-from-this-round vertices —
-    # no second left-join pass.
-    verts = (
-        pairs.select(F.col("id_a").alias("v"))
-        .unionByName(pairs.select(F.col("id_b").alias("v")))
-        .distinct()
-    )
+    # vertex its own neighbor, so one join+agg per hop covers both the
+    # neighbor minimum AND keeping isolated-from-this-hop vertices —
+    # no second left-join pass. One shuffle on src serves the distinct
+    # and the window that stores hop 1 on every row: against the
+    # identity labeling, "min of neighbors' labels" IS "min of neighbor
+    # ids", so hop 1 needs no labels join at all.
+    ends = [("id_a", "id_b"), ("id_b", "id_a"), ("id_a", "id_a"), ("id_b", "id_b")]
+    edges = [pairs.select(F.col(s).alias("src"), F.col(d).alias("dst")) for s, d in ends]
     edges_self = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .unionByName(verts.select(F.col("v").alias("src"), F.col("v").alias("dst")))
+        functools.reduce(DataFrame.unionByName, edges)
+        .repartition("src")
         .distinct()
+        .withColumn("hop1", F.min("dst").over(Window.partitionBy("src")))
     ).localCheckpoint()
-    # r12: hop 1 needs no labels join at all — against the identity
-    # labeling (label(v) = v), "min of neighbors' labels" IS "min of
-    # neighbor ids", so the first hop is one groupBy over the edge
-    # table. Removes a full edge-table shuffle + join from round 1 at
-    # any scale (guide §2.4 "remove shuffles outright"); later hops
-    # start from this frame.
-    labels = edges_self.groupBy("src").agg(
-        F.min("dst").alias("label")
-    ).select(F.col("src").alias("v"), "label")
-    # Labels only ever decrease, so the label sum is strictly monotone
-    # while anything changes: comparing one exact-decimal scalar per
-    # round replaces the old join-with-previous + count convergence job.
-    # r12: no init-sum job — the first pair's sum has nothing to compare
-    # against (prev_sum None), so detection happens exactly where it did
-    # before for any input with at least one label change (the pair
-    # AFTER the last change); only an ALREADY-converged input (all
-    # components singletons) now verifies at pair 2 instead of pair 1,
-    # trading one agg job on every real input for one extra no-op pair
-    # on the degenerate one. Budget math unchanged: final-change pair
-    # ceil(mi/2) is detected at ceil(mi/2)+1 <= mi//2 + 2.
-    label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    prev_sum: object = _UNSET
+    # Each undirected edge is stored both ways, each row carrying its
+    # src's hop-1 label: the edge joins two different labels exactly
+    # when its two rows disagree. least/greatest skip NULL, so the two
+    # rows of an edge to a NULL id meet under (x, x) — a key no
+    # self-loop takes, as self-loops are filtered out here.
+    crossing = (
+        edges_self.filter(~F.col("src").eqNullSafe(F.col("dst")))
+        .groupBy(F.least("src", "dst"), F.greatest("src", "dst"))
+        .agg(F.min("hop1").alias("lo"), F.max("hop1").alias("hi"))
+        .filter(F.col("lo") != F.col("hi"))
+    )
+    labels = edges_self.filter(F.col("src").eqNullSafe(F.col("dst"))).select(
+        F.col("src").alias("v"), F.col("hop1").alias("label")
+    )
+    if crossing.isEmpty():
+        return labels.select(F.col("v").alias("doc_id"), F.col("label").alias("cluster_id"))
 
-    def _propagate(lbl: DataFrame) -> DataFrame:
-        return (
-            edges_self.join(lbl, edges_self["dst"] == lbl["v"])
-            .groupBy("src")
-            .agg(F.min("label").alias("label"))
-            .select(F.col("src").alias("v"), "label")
-        )
+    def _hop(lbl: DataFrame) -> DataFrame:
+        return edges_self.join(lbl, edges_self["dst"] == lbl["v"]).groupBy("src")
 
-    # r12 (guide §5 "the driver should do almost no data work"): TWO
-    # propagation hops per checkpoint + convergence collect — each loop
-    # iteration costs 2 sequential driver jobs regardless of data size,
-    # so pairing hops halves the scheduling latency per hop (measured
-    # ~0.3-0.6 s/job at sf0.1, and one fewer barrier per hop at scale).
-    # Fixpoint-identical: propagation is monotone (labels only
-    # decrease), an extra hop past convergence is a no-op, and the sum
-    # comparison still detects exactly "no change across the pair".
-    # A lazy-checkpoint fusion of the two jobs was measured FIRST and
-    # REVERTED: dedup_clusters CPU 0.93 -> 1.69 s (the deferred persist
-    # recomputes the pair pipeline; see OPTIMIZATION_r12.md).
-    # Hop budget: 2 * (mi // 2 + 2) >= mi + 2 hops, i.e. at least the
-    # old mi propagation rounds plus a full verification pair.
+    # Round r runs hops 2r and 2r + 1; the closed neighborhood is
+    # symmetric, so "some edge at v joins two different hop-2r labels"
+    # is "their min and max over v's neighborhood differ". A NULL id
+    # never matches the join, so it passes no label on and may sit
+    # between clusters: its label is the min of its neighbors', which
+    # the last hop computes, and it takes no part in the test. The last
+    # round tests hop 2 * (max_iterations // 2 + 2) >= max_iterations + 3.
     for _ in range(max_iterations // 2 + 2):
-        labels_new = _propagate(_propagate(labels)).localCheckpoint()
-        cur_sum = labels_new.agg(label_sum).collect()[0]["s"]
-        labels = labels_new
-        if prev_sum is not _UNSET and cur_sum == prev_sum:
+        mid = _hop(labels).agg(F.min("label").alias("label")).select(
+            F.col("src").alias("v"), "label"
+        )
+        labels = (
+            _hop(mid)
+            .agg(
+                F.min("label").alias("label"),
+                (
+                    F.col("src").isNotNull() & (F.max("label") != F.min("label"))
+                ).alias("open"),
+            )
+            .select(F.col("src").alias("v"), "label", "open")
+            .localCheckpoint()
+        )
+        if labels.filter(F.col("open")).isEmpty():
             break
-        prev_sum = cur_sum
     else:
         # Diameter exceeded the per-hop budget (a chain-shaped component):
         # delegate to the alternating algorithm instead of failing.

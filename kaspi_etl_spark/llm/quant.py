@@ -113,8 +113,8 @@ def dequantize_expr(codes_col: str, cb_mn: list, cb_mx: list):
     arrays — the read path for scoring against quantized corpora.
     Mind NOTES' higher-order-function caveats: the lambda body is a few
     scalar ops over literals, the acceptable HOF case."""
-    mn = array_lit([float(v) for v in cb_mn], "double")
-    mx = array_lit([float(v) for v in cb_mx], "double")
+    mn = array_lit([float(v) for v in cb_mn], "double", cache=False)
+    mx = array_lit([float(v) for v in cb_mx], "double", cache=False)
 
     def _decode(c, i):
         lo = F.try_element_at(mn, i + 1)

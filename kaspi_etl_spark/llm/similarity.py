@@ -945,7 +945,7 @@ def _nearest_centroid(qv: Column, centroids: list[tuple[int, list[int]]]) -> Col
     nothing to build, nothing to probe)."""
     opts = []
     for cid, qc in centroids:
-        lit_c = array_lit([int(v) for v in qc], "bigint")
+        lit_c = array_lit([int(v) for v in qc], "bigint", cache=False)
         d = F.aggregate(
             F.zip_with(qv, lit_c, lambda a, b: (a - b) * (a - b)),
             F.lit(0).cast("long"),
@@ -962,7 +962,7 @@ def _nearest_lists(qv: Column, centroids: list[tuple[int, list[int]]], nprobe: i
     folds; the sort is over the k-element in-row array, not data."""
     opts = []
     for cid, qc in centroids:
-        lit_c = array_lit([int(v) for v in qc], "bigint")
+        lit_c = array_lit([int(v) for v in qc], "bigint", cache=False)
         d = F.aggregate(
             F.zip_with(qv, lit_c, lambda a, b: (a - b) * (a - b)),
             F.lit(0).cast("long"),
@@ -1211,7 +1211,7 @@ def kmeans_assign_trained(
 def _sub_l2(qv_slice: Column, qc: list[int]) -> Column:
     """Exact integer squared L2 between a quantized subvector column and a
     codebook centroid literal."""
-    lit_c = array_lit([int(v) for v in qc], "bigint")
+    lit_c = array_lit([int(v) for v in qc], "bigint", cache=False)
     return F.aggregate(
         F.zip_with(qv_slice, lit_c, lambda a, b: (a - b) * (a - b)),
         F.lit(0).cast("long"),

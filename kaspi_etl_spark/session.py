@@ -15,6 +15,18 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """A quarter of the host's memory, at most 48g: the local-mode JVM
+    holds driver and executors, and a fixed 48g heap lets a host with
+    less memory kill it. 48g where the host's memory cannot be read."""
+    try:
+        with open(meminfo) as f:
+            total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{min(48 * 1024, total_kb // 4 // 1024)}m"
+
+
 def get_spark(
     app_name: str = "kaspi_etl_spark",
     cpus: int | None = None,
@@ -80,7 +92,10 @@ def get_spark(
     )
     if not os.environ.get("SPARK_MASTER") and "spark.master" not in (extra_conf or {}):
         builder = builder.master(f"local[{cpus}]")
-        builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        builder = builder.config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

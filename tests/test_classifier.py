@@ -40,14 +40,18 @@ def test_predict_without_labels_and_hostile_rows(spark):
             (1, "alpha beta alpha", 0),  # duplicate id, conflicting label
             (2, None, 0),  # null text: bias-only features
             (3, "", 1),
+            (None, "gamma delta gamma delta", 1),  # null id: counts in n only
         ],
         "doc_id long, text string, y_true long",
     )
     w = C.train(docs, F.col("y_true") == 1, iters=2)
+    # the trajectory is exact integer arithmetic: pinned values, with the
+    # null-id group counted in n and absent from every gradient
+    assert {j: x for j, x in enumerate(w) if x} == {28: 144, 38: 287, 64: 1425}
     out = C.predict(docs, w)
     assert out.columns == ["doc_id", "z_scaled", "p_scaled", "pred"]
     rows = {r["doc_id"]: r for r in out.collect()}
-    assert set(rows) == {1, 2, 3}  # dup ids collapse; null text still scored
+    assert set(rows) == {1, 2, 3, None}  # dup ids collapse; null text still scored
     # null-text doc's margin is exactly the scaled bias weight
     assert rows[2]["z_scaled"] == C.LR_BIAS_X * w[C.LR_D]
     # labels collapse by MAX on duplicate ids
@@ -74,3 +78,35 @@ def test_weights_roundtrip_bit_exact(spark, tmp_path):
     a = sorted(map(tuple, C.predict(docs, w).collect()))
     b = sorted(map(tuple, C.predict(docs, w2).collect()))
     assert a == b
+
+
+def test_logreg_model_follows_a_table_rewritten_in_place(spark, sf_dir, tmp_path):
+    """The trained model is cached per corpus directory; rewriting
+    documents.parquet in place must retrain, not score with the old
+    weights."""
+    import shutil
+    import sys
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    import check_oracle
+    from kaspi_etl_spark import registry
+
+    for t in check_oracle.TABLES:
+        if t != "documents":
+            (tmp_path / f"{t}.parquet").symlink_to(Path(sf_dir) / f"{t}.parquet")
+    docs_path = tmp_path / "documents.parquet"
+    shutil.copyfile(Path(sf_dir) / "documents.parquet", docs_path)
+    full = pq.read_table(docs_path)
+    before = registry.QUERIES["docs_logreg_weights"](spark, str(tmp_path)).collect()
+
+    pq.write_table(full.slice(0, full.num_rows // 3), docs_path)  # in place
+    con = check_oracle.duck_con(str(tmp_path))
+    for name in ("docs_logreg_weights", "docs_logreg_predict"):
+        sdf = registry.QUERIES[name](spark, str(tmp_path))
+        result = check_oracle.compare(name, sdf, con)
+        assert result["status"] == "OK", result
+    after = registry.QUERIES["docs_logreg_weights"](spark, str(tmp_path)).collect()
+    assert sorted(map(tuple, after)) != sorted(map(tuple, before))

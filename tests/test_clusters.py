@@ -86,26 +86,60 @@ def test_star_cc_long_chain(spark):
     assert len(out) == 51
 
 
+def test_cc_self_pair_converges_at_hop_one(spark):
+    # an already-converged input: the hop-1 fixpoint test passes, so the
+    # labels come straight off the edge table
+    pairs = spark.createDataFrame([(5, 5)], "id_a long, id_b long")
+    out = dedup.connected_components(pairs).collect()
+    assert [(r["doc_id"], r["cluster_id"]) for r in out] == [(5, 5)]
+
+
+def _build_jobs(spark, rows, max_iterations):
+    """(Spark jobs run while connected_components builds its result,
+    sorted output rows)."""
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+    group = f"cc-build-{len(rows)}-{max_iterations}"
+    sc.setJobGroup(group, group)
+    try:
+        out = dedup.connected_components(pairs, max_iterations=max_iterations)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    return n, sorted(map(tuple, out.collect()))
+
+
+# Build-time job counts under the suite's session (local[4], 4 shuffle
+# partitions, AQE: every shuffle map stage is a job of its own). They
+# pin the loop's shape: 2 jobs materialize the edge table and 2 run the
+# hop-1 test; a propagation round adds 9 (two hops with their broadcast
+# and shuffle stages, the checkpoint, and the fixpoint scan).
+
+
+def test_cc_build_jobs_clique_needs_no_round(spark):
+    n, out = _build_jobs(spark, [(a, b) for a in range(6) for b in range(6) if a < b], 10)
+    assert out == [(v, 0) for v in range(6)]
+    assert n == 4
+
+
 def test_minlabel_cc_falls_back_to_star_on_chain(spark):
     """connected_components with an undersized round budget must still
-    return correct labels (delegating to the star variant), not raise."""
-    chain = [(i, i + 1) for i in range(30)]
-    pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    out = {r.doc_id: r.cluster_id
-           for r in dedup.connected_components(pairs, max_iterations=3).collect()}
-    assert set(out.values()) == {0}
-    assert len(out) == 31
+    return correct labels (delegating to the star variant), not raise.
+    max_iterations // 2 + 2 = 3 rounds test hops 2, 4 and 6 of this
+    diameter-30 chain; the star algorithm's own rounds follow."""
+    n, out = _build_jobs(spark, [(i, i + 1) for i in range(30)], 3)
+    assert out == [(v, 0) for v in range(31)]
+    assert n == 85
 
 
 def test_minlabel_cc_exact_budget_converges(spark):
-    """A graph needing exactly max_iterations propagation rounds is
-    converged at that point — the verification round must not trip the
-    fallback (ADVICE r2)."""
-    chain = [(i, i + 1) for i in range(4)]  # diameter 4
-    pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    out = {r.doc_id: r.cluster_id
-           for r in dedup.connected_components(pairs, max_iterations=4).collect()}
-    assert set(out.values()) == {0}
+    """A graph needing exactly max_iterations propagation hops converges
+    inside the budget instead of tripping the fallback (ADVICE r2): the
+    hop-1 test fails, round 1 tests hop 2, round 2 hop 4."""
+    n, out = _build_jobs(spark, [(i, i + 1) for i in range(4)], 4)  # diameter 4
+    assert out == [(v, 0) for v in range(5)]
+    assert n == 22
 
 
 def test_pagerank_fixed_point_properties(spark):

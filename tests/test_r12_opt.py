@@ -1,7 +1,9 @@
-"""Round-12 optimization internals: the concurrency helper, the minhash
-expression caches, and the CC convergence sentinel (no init-sum job)."""
+"""Round-12 optimization internals: the concurrency helper and the minhash
+expression caches."""
 
 from __future__ import annotations
+
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,6 +27,22 @@ def test_build_concurrently_propagates_exceptions(spark):
 
     with pytest.raises(ValueError, match="expected"):
         build_concurrently(lambda: 1, boom)
+
+
+def test_build_concurrently_fails_fast():
+    release, finished = threading.Event(), threading.Event()
+
+    def slow():
+        release.wait(60)
+        finished.set()
+
+    def boom():
+        raise ValueError("fast")
+
+    with pytest.raises(ValueError, match="fast"):
+        build_concurrently(slow, boom)
+    assert not finished.is_set()  # raised while the slow thunk still ran
+    release.set()
 
 
 def test_minhash_signature_cache_hits_and_values(spark):
@@ -59,12 +77,3 @@ def test_minhash_pairs_band_cache_and_determinism(spark):
     assert got1 == got2
     # the four identical docs must all pair up; the outlier must not
     assert set(got1) == {(a, b) for a in range(4) for b in range(4) if a < b}
-
-
-def test_cc_detects_convergence_without_init_sum(spark):
-    # an already-converged input (self-pair only): labels never change,
-    # detection now happens at pair 2 — still well inside the budget,
-    # result identical
-    pairs = spark.createDataFrame([(5, 5)], "id_a long, id_b long")
-    out = dedup.connected_components(pairs).collect()
-    assert [(r["doc_id"], r["cluster_id"]) for r in out] == [(5, 5)]

@@ -234,6 +234,37 @@ def flag_suspects(
     )
 
 
+def run_shape(spark, timings: dict[str, float]) -> dict[str, int]:
+    """How big and how parallel the run was: queries timed, host cores
+    this process may use, and the session's defaultParallelism (the
+    local[N] it really got). Without them a shorter query map reads as a
+    dropped query and a cores change as an ignored setting."""
+    try:
+        cpus = len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        cpus = os.cpu_count() or 0
+    return {
+        "n_queries": len(timings),
+        "cpus": cpus,
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
+    }
+
+
+def fit_line(out: dict, timings: dict[str, float], budget: int = TAIL_BUDGET) -> str:
+    """The one-line JSON artifact, at most ``budget`` bytes: it is parsed
+    out of the last 2000 bytes of the bench's stdout. Over budget, the
+    query map keeps only the slowest queries until the line fits; every
+    other field stays."""
+    line = json.dumps(out, separators=(",", ":"))
+    slowest = sorted(timings, key=timings.get, reverse=True)
+    while len(line) > budget and slowest:
+        slowest.pop()
+        out["queries"] = {k: round(timings[k], 2) for k in slowest}
+        out["queries_truncated"] = len(timings) - len(slowest)
+        line = json.dumps(out, separators=(",", ":"))
+    return line
+
+
 def _git_head() -> str | None:
     try:
         return (
@@ -369,6 +400,7 @@ def main() -> None:
         "unit": "sec",
         "queries": {k: round(v, 2) for k, v in timings.items()},
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        **run_shape(spark, timings),
     }
     if cpu_timings:
         out["cpu_total"] = round(sum(cpu_timings.values()), 3)
@@ -433,17 +465,8 @@ def main() -> None:
     except OSError:
         pass  # the sidecar is best-effort; the stdout line is the artifact
 
-    line = json.dumps(out, separators=(",", ":"))
-    if len(line) > TAIL_BUDGET:
-        # Degrade gracefully rather than emit an unparseable artifact:
-        # keep only the slowest queries in the map until the line fits.
-        slowest = sorted(timings, key=timings.get, reverse=True)
-        while len(line) > TAIL_BUDGET and slowest:
-            slowest.pop()
-            out["queries"] = {k: round(timings[k], 2) for k in slowest}
-            out["queries_truncated"] = len(timings) - len(slowest)
-            line = json.dumps(out, separators=(",", ":"))
-    print(line)
+    # Degrade gracefully rather than emit an unparseable artifact.
+    print(fit_line(out, timings))
     sys.exit(1 if errors else 0)
 
 

@@ -759,10 +759,16 @@ def connected_components_star(
             .distinct()
         )
 
+    # Every vertex, flagged when one of its pairs has a NULL other end: a
+    # NULL id joins no edge below, and takes the minimum of those
+    # neighbors' labels, as in `connected_components`.
     verts = (
-        pairs.select(F.col("id_a").alias("n"))
-        .unionByName(pairs.select(F.col("id_b").alias("n")))
-        .distinct()
+        pairs.select(F.col("id_a").alias("n"), F.col("id_b").isNull().alias("z"))
+        .unionByName(
+            pairs.select(F.col("id_b").alias("n"), F.col("id_a").isNull().alias("z"))
+        )
+        .groupBy("n")
+        .agg(F.max("z").alias("z"))
         .localCheckpoint()
     )
     edges = (
@@ -795,13 +801,23 @@ def connected_components_star(
             "rounds — not reachable for graphs of diameter < 2^rounds; "
             "raise max_rounds"
         )
-    # Fixpoint edges are (node, component_min) stars; nodes that are
-    # their own component minimum never appear as a child.
-    child = edges.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
-    roots = verts.join(
-        edges.select(F.col("u").alias("n")).distinct(), "n", "left_anti"
-    ).select(F.col("n").alias("doc_id"), F.col("n").alias("cluster_id"))
-    return child.unionByName(roots)
+    # Fixpoint edges are (node, component_min) stars and a component
+    # minimum is never a child, so a vertex's label is the least of its
+    # own id and its star edge's target — one aggregate, no join.
+    labels = (
+        edges.select("u", "v", F.lit(False).alias("z"))
+        .unionByName(
+            verts.filter(F.col("n").isNotNull()).select(
+                F.col("n").alias("u"), F.col("n").alias("v"), "z"
+            )
+        )
+        .groupBy(F.col("u").alias("doc_id"))
+        .agg(F.min("v").alias("cluster_id"), F.max("z").alias("z"))
+    )
+    null_id = F.lit(None).cast(pairs.schema["id_a"].dataType).alias("doc_id")
+    # Grouped, not global: no flagged vertex gives no row at all.
+    null_label = labels.filter("z").groupBy(null_id).agg(F.min("cluster_id").alias("cluster_id"))
+    return labels.drop("z").unionByName(null_label)
 
 
 # ---------------------------------------------------------------------------

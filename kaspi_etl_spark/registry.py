@@ -1114,14 +1114,12 @@ SQL_WATCH_EVENTS = """
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-adaptive events reader. Some event dumps store `ts` as
     TIMESTAMP(NANOS) — Spark's parquet reader surfaces those as BIGINT only
-    under `nanosAsLong`, so we integer-divide to micros (a double division
-    would lose precision: epoch-nanos > 2^53). Newer dumps store `ts` as a
-    real timestamp (µs); use it as-is. Branch on the actual dtype instead of
-    assuming, so external schema drift can't break every event query again."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # _read (cached scan handle): the conf above is set before EVERY
-    # call — including the one that creates the cached scan — and is
-    # idempotent, so the cached schema is always the post-conf one.
+    under `spark.sql.legacy.parquet.nanosAsLong`, which `session.get_spark`
+    sets for the whole session, so we integer-divide to micros (a double
+    division would lose precision: epoch-nanos > 2^53). Newer dumps store
+    `ts` as a real timestamp (µs); use it as-is. Branch on the actual dtype
+    instead of assuming, so external schema drift can't break every event
+    query again."""
     e = _read(spark, sf_dir, "events")
     ts_type = e.schema["ts"].dataType
     if isinstance(ts_type, T.LongType):

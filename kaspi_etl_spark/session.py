@@ -82,6 +82,11 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # Event dumps may store ts as parquet TIMESTAMP(NANOS), which Spark
+        # reads only as BIGINT under this flag (registry.read_events then
+        # converts). A session-wide setting: the cached builders never
+        # re-run their body on a plan-cache hit.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")

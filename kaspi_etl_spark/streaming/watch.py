@@ -13,7 +13,15 @@ Two implementations with an equivalence test between them (SURVEY.md 5):
 * ``bot_flags_stream`` — Structured Streaming with keyed state holding the
   ring buffer, checkpointed; the production form. State is bounded (5
   numbers per key), so at 100 TB/day the state store scales with
-  #(variant, seller) pairs, not event volume.
+  #(variant, seller) pairs, not event volume. ``bot_flags_stream_v2`` is
+  the same job on transformWithStateInPandas.
+
+Both stream forms project the events to the 4 columns the update reads
+(variantId, seller, ts, price) before ``groupBy``, and both stateful
+adapters (``_flag_group``, ``BotFlagProcessor``) call one columnar kernel,
+``_roll_flags``: numpy tick minima and undercut bits per micro-batch, then
+a single pass over (seller, bit) to roll the ring buffers. No pandas row
+iteration runs inside the stateful operator.
 
 Divergence note: the reference computes each tick's variant minimum over
 that tick's snapshot only; the replay form uses the variant's minimum over
@@ -73,61 +81,100 @@ _OUT_SCHEMA = T.StructType(
 )
 
 
-def _flag_group(key: tuple, pdfs: Iterable[Any], state: Any):
-    """applyInPandasWithState update function keyed by variantId: per tick
-    (distinct ts within the micro-batch), compute the tick's variant
-    minimum over all sellers in the group, then roll each seller's ring
-    buffer of the last 5 undercut bits — price_watch.ts:31-52."""
+_OUT_COLS = [f.name for f in _OUT_SCHEMA.fields]
+
+# The only columns the stateful update reads. Both stream forms project to
+# them before groupBy, so each group converts 4 Arrow columns to pandas and
+# the shuffle carries nothing else, however wide the event schema grows.
+_KERNEL_COLS = ["variantId", "seller", "ts", "price"]
+
+
+def _roll_flags(variant: Any, chunks: Iterable[Any], buffers_json: str | None):
+    """The per-variant update shared by both stateful APIs —
+    price_watch.ts:31-52 over one micro-batch of one variant.
+
+    Every tick (distinct ts) is scored against its minimum positive price
+    over all sellers, and each seller's ring buffer of the last 5 undercut
+    bits rolls once per row. ``chunks`` are the group's pandas frames: a
+    group larger than arrow.maxRecordsPerBatch arrives as several, and a
+    tick split across them must still get one minimum and one append per
+    row, so they are concatenated first. Rows with a NULL ts belong to no
+    tick: no output, no append. Rows keep their input order within a tick
+    (stable sort), so a seller seen twice in a tick appends in that order.
+
+    Everything but the ring buffers is columnar: a stable argsort, one
+    ``np.minimum.reduceat`` over each tick's run of rows for the minima,
+    one vector of undercut bits; the buffers then roll in a single pass
+    over (seller, bit). Returns (output frame, new ``buffers_json``) — the
+    state stays a JSON ``{seller: [bits]}`` so existing checkpoints
+    resume."""
     import json
 
+    import numpy as np
     import pandas as pd
 
-    bufs: dict[str, list[int]] = json.loads(state.get[0]) if state.exists else {}
-    out = []
-    # Materialize the whole group before grouping by tick: a group larger
-    # than arrow.maxRecordsPerBatch arrives as multiple chunks, and a ts
-    # tick split across chunks would get per-fragment minima and double
-    # ring-buffer appends. Memory is bounded by the micro-batch group.
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        whole = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        for ts, tick in whole.sort_values("ts").groupby("ts", sort=True):
-            pos = tick.loc[tick["price"] > 0, "price"]
-            vmin = int(pos.min()) if len(pos) else None
-            for _, row in tick.iterrows():
-                undercut = int(
-                    vmin is not None and 0 < row["price"] <= vmin + UNDERCUT_MARGIN
-                )
-                rec = bufs.setdefault(str(row["seller"]), [])
-                rec.append(undercut)
-                while len(rec) > WINDOW_TICKS:
-                    rec.pop(0)
-                out.append(
-                    {
-                        "variantId": key[0],
-                        "seller": row["seller"],
-                        "ts": ts,
-                        "price": row["price"],
-                        "isPriceBot": sum(rec) >= FLAG_THRESHOLD,
-                    }
-                )
-    state.update((json.dumps(bufs),))
-    yield pd.DataFrame(out, columns=[f.name for f in _OUT_SCHEMA.fields])
+    bufs: dict[str, list[int]] = json.loads(buffers_json) if buffers_json else {}
+    frames = [pdf for pdf in chunks if len(pdf)] or [pd.DataFrame(columns=_KERNEL_COLS)]
+    whole = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+    ts = whole["ts"].to_numpy()
+    rows = np.flatnonzero(~pd.isna(ts))
+    if not len(rows):
+        return pd.DataFrame(columns=_OUT_COLS), json.dumps(bufs)
+    rows = rows[np.argsort(ts[rows], kind="stable")]
+    ts = ts[rows]
+    price = whole["price"].to_numpy()[rows]
+    sellers = whole["seller"].to_numpy()[rows]
+
+    # Arrow hands a LongType column over as int64, or as float64 with NaN
+    # once it holds a NULL.
+    top = (np.finfo if price.dtype.kind == "f" else np.iinfo)(price.dtype).max
+    positive = price > 0  # NULL (NaN) and zero prices never undercut
+    quote = np.where(positive, price, top)
+    starts = np.flatnonzero(np.concatenate(([True], ts[1:] != ts[:-1])))
+    line = np.repeat(np.minimum.reduceat(quote, starts), np.diff(starts, append=len(ts)))
+    # quote - line never overflows: a positive quote is >= its tick's
+    # minimum, and a tick without one has line == quote == top.
+    bits = (positive & (quote - line <= UNDERCUT_MARGIN)).astype(np.int8).tolist()
+
+    flags = []
+    for seller, bit in zip(map(str, sellers), bits):
+        rec = bufs.setdefault(seller, [])
+        rec.append(bit)
+        del rec[:-WINDOW_TICKS]
+        flags.append(sum(rec) >= FLAG_THRESHOLD)
+    # Keys in _OUT_COLS order: a columns= argument would cost a reindex,
+    # 2-3x the construction itself at 40 rows a group. The arrays are
+    # fresh (fancy-indexed), so they need no copy.
+    out = pd.DataFrame(
+        {"variantId": variant, "seller": sellers, "ts": ts, "price": price, "isPriceBot": flags},
+        copy=False,
+    )
+    return out, json.dumps(bufs)
+
+
+def _flag_group(key: tuple, pdfs: Iterable[Any], state: Any):
+    """applyInPandasWithState adapter of ``_roll_flags``, keyed by
+    variantId; the group state is the one-field ``STATE_SCHEMA`` row."""
+    out, buffers_json = _roll_flags(key[0], pdfs, state.get[0] if state.exists else None)
+    state.update((buffers_json,))
+    yield out
 
 
 def bot_flags_stream(events: DataFrame) -> DataFrame:
     """T2 streaming form: keyed ring-buffer state via applyInPandasWithState.
 
-    ``events`` is a streaming DataFrame (variantId, seller, ts, price).
-    Keyed by variantId so each group sees all sellers of a tick — the
-    tick's minimum is computed inside the stateful operator exactly like
-    the reference's per-tick pass, with no streaming aggregation or
-    stream-stream join needed. State per key is #sellers x 5 ints, so the
-    state store scales with distinct (variant, seller), not event volume.
+    ``events`` is a streaming DataFrame with at least variantId, seller,
+    ts and price; only those 4 columns reach the shuffle and the Python
+    worker. Keyed by variantId so each group sees all sellers of a tick —
+    the tick's minimum is computed inside the stateful operator (the
+    ``_roll_flags`` kernel) exactly like the reference's per-tick pass,
+    with no streaming aggregation or stream-stream join needed. State per
+    key is #sellers x 5 ints, so the state store scales with distinct
+    (variant, seller), not event volume.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    return events.groupBy("variantId").applyInPandasWithState(
+    return events.select(*_KERNEL_COLS).groupBy("variantId").applyInPandasWithState(
         _flag_group,
         outputStructType=_OUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
@@ -155,11 +202,11 @@ class BotFlagProcessor(StatefulProcessor):
     """transformWithStateInPandas form of the T2 ring-buffer detector —
     the Spark 4 replacement for applyInPandasWithState, with typed state
     variables and RocksDB-ready layout. Keyed by variantId; the value
-    state holds every seller's last-5 undercut bits."""
+    state holds every seller's last-5 undercut bits in the same JSON
+    encoding as ``STATE_SCHEMA``, and ``handleInputRows`` is an adapter of
+    the same ``_roll_flags`` kernel as ``_flag_group``."""
 
     def init(self, handle) -> None:
-        import json  # noqa: F401
-
         from pyspark.sql import types as T
 
         self._bufs = handle.getValueState(
@@ -167,53 +214,21 @@ class BotFlagProcessor(StatefulProcessor):
         )
 
     def handleInputRows(self, key, rows, timer_values):
-        import json
-
-        import pandas as pd
-
-        bufs: dict[str, list[int]] = (
-            json.loads(self._bufs.get()[0]) if self._bufs.exists() else {}
+        out, buffers_json = _roll_flags(
+            key[0], rows, self._bufs.get()[0] if self._bufs.exists() else None
         )
-        out = []
-        # Same chunk-materialization as _flag_group: never split a ts
-        # tick across Arrow chunks (per-fragment minima / double appends).
-        chunks = [pdf for pdf in rows if len(pdf)]
-        if chunks:
-            whole = (
-                pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-            )
-            for ts, tick in whole.sort_values("ts").groupby("ts", sort=True):
-                pos = tick.loc[tick["price"] > 0, "price"]
-                vmin = int(pos.min()) if len(pos) else None
-                for _, row in tick.iterrows():
-                    undercut = int(
-                        vmin is not None and 0 < row["price"] <= vmin + UNDERCUT_MARGIN
-                    )
-                    rec = bufs.setdefault(str(row["seller"]), [])
-                    rec.append(undercut)
-                    while len(rec) > WINDOW_TICKS:
-                        rec.pop(0)
-                    out.append(
-                        {
-                            "variantId": key[0],
-                            "seller": row["seller"],
-                            "ts": ts,
-                            "price": row["price"],
-                            "isPriceBot": sum(rec) >= FLAG_THRESHOLD,
-                        }
-                    )
-        self._bufs.update((json.dumps(bufs),))
-        yield pd.DataFrame(out, columns=[f.name for f in _OUT_SCHEMA.fields])
+        self._bufs.update((buffers_json,))
+        yield out
 
     def close(self) -> None:
         pass
 
 
 def bot_flags_stream_v2(events: DataFrame) -> DataFrame:
-    """T2 on the transformWithStateInPandas API (Spark 4). Same
-    semantics as bot_flags_stream; tests assert equivalence with the
-    batch replay."""
-    return events.groupBy("variantId").transformWithStateInPandas(
+    """T2 on the transformWithStateInPandas API (Spark 4). Same kernel,
+    projection and semantics as bot_flags_stream; tests assert
+    equivalence with the batch replay."""
+    return events.select(*_KERNEL_COLS).groupBy("variantId").transformWithStateInPandas(
         statefulProcessor=BotFlagProcessor(),
         outputStructType=_OUT_SCHEMA,
         outputMode="append",

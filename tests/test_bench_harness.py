@@ -74,3 +74,35 @@ def test_burned_pass_produces_no_suspects_end_to_end():
     clean = {"q1": 0.5, "q2": 2.0, "q3": 0.1}
     timings, cpu = bench.min_over_passes(_burned(clean, burn_pass=1))
     assert bench.flag_suspects(cpu, dict(clean)) == []
+
+
+class _Session:
+    class sparkContext:
+        defaultParallelism = 6
+
+
+def test_run_shape_reports_queries_cores_and_parallelism():
+    shape = bench.run_shape(_Session, {"q1": 0.5, "q2": 1.0})
+    assert shape["n_queries"] == 2
+    assert shape["defaultParallelism"] == 6
+    assert isinstance(shape["cpus"], int) and shape["cpus"] >= 1
+
+
+def test_fit_line_keeps_shape_fields_under_the_tail_budget():
+    """A query map far over the budget is cut to the slowest queries;
+    the line still parses, fits, and keeps n_queries, cpus and
+    defaultParallelism."""
+    import json
+
+    timings = {f"some_long_headline_query_name_{i:03d}": 0.01 * i for i in range(272)}
+    out = {"metric": "headline_queries_total_wall_sec", "value": 1.0, "unit": "sec",
+           "queries": dict(timings), "sf": 0.1, **bench.run_shape(_Session, timings)}
+    line = bench.fit_line(out, timings)
+    assert len(line) <= bench.TAIL_BUDGET < 2000
+    parsed = json.loads(line)
+    assert parsed["n_queries"] == 272 and parsed["defaultParallelism"] == 6
+    assert parsed["cpus"] >= 1
+    assert parsed["queries_truncated"] == 272 - len(parsed["queries"])
+    kept = min(parsed["queries"].values())
+    assert all(v <= kept for k, v in timings.items() if k not in parsed["queries"])
+

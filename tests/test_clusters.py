@@ -133,6 +133,22 @@ def test_minlabel_cc_falls_back_to_star_on_chain(spark):
     assert n == 85
 
 
+def test_star_fallback_labels_null_id_like_propagation(spark):
+    """A NULL id touching two chains longer than the propagation budget
+    (so the star fallback runs) takes the least of its neighbors'
+    labels, exactly as propagation labels it at a budget that fits. A
+    NULL id links nothing: the chains stay two clusters."""
+    rows = [(i, i + 1) for i in range(30)] + [(100 + i, 101 + i) for i in range(12)]
+    rows += [(None, 15), (105, None), (None, 200), (None, None)]
+    pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+    fallback = dedup.connected_components(pairs, max_iterations=3).collect()
+    exact = dedup.connected_components(pairs, max_iterations=60).collect()
+    assert len(fallback) == len(exact) == 31 + 13 + 1 + 1
+    assert dict(map(tuple, fallback)) == dict(map(tuple, exact))
+    assert dict(map(tuple, fallback))[None] == 0
+    assert dict(map(tuple, fallback))[110] == 100
+
+
 def test_minlabel_cc_exact_budget_converges(spark):
     """A graph needing exactly max_iterations propagation hops converges
     inside the budget instead of tripping the fallback (ADVICE r2): the

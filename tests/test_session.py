@@ -19,3 +19,9 @@ def test_driver_memory_is_capped_at_48g(tmp_path):
 
 def test_driver_memory_without_meminfo(tmp_path):
     assert default_driver_memory(str(tmp_path / "missing")) == "48g"
+
+
+def test_session_reads_nanosecond_timestamps_as_long(spark):
+    # registry.read_events relies on it; a plan-cache hit never re-runs
+    # the reader, so the session itself must carry it
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"

@@ -165,6 +165,330 @@ def test_flag_group_chunked_tick_single_min():
     assert all(len(v) == 1 for v in bufs.values())  # no double appends
 
 
+# --- the shared price-watch kernel, driven without Spark -------------------
+
+
+class _GroupState:
+    """In-memory stand-in for applyInPandasWithState's GroupState."""
+
+    def __init__(self, value=None):
+        self.value = value
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+
+def _reference_batch(bufs, rows):
+    """Pure-Python reference for one variant's micro-batch
+    (price_watch.ts:31-52): rows are (seller, ts, price) in arrival order,
+    price None for NULL. NULL-ts rows are dropped; ticks run in ts order,
+    rows of a tick in arrival order; the tick's minimum positive price sets
+    the undercut line. Rolls ``bufs`` ({seller: [bits]}) in place and
+    returns [(seller, ts, price, isPriceBot)]."""
+    out = []
+    for ts in sorted({r[1] for r in rows if r[1] is not None}):
+        tick = [r for r in rows if r[1] == ts]
+        positive = [p for _, _, p in tick if p is not None and p > 0]
+        line = min(positive) if positive else None
+        for seller, _, price in tick:
+            bit = int(line is not None and price is not None and 0 < price <= line + 50)
+            buf = bufs.setdefault(seller, [])
+            buf.append(bit)
+            del buf[:-5]
+            out.append((seller, ts, price, sum(buf) >= 3))
+    return out
+
+
+def _chunks(rows, cuts):
+    """Arrow-shaped pandas chunks of (seller, ts, price) rows: a NULL
+    price makes the column float64 with NaN, a NULL ts is NaT."""
+    import pandas as pd
+
+    frame = pd.DataFrame(
+        {
+            "variantId": ["v1"] * len(rows),
+            "seller": [r[0] for r in rows],
+            "ts": pd.to_datetime([r[1] for r in rows]),
+            "price": [float("nan") if r[2] is None else r[2] for r in rows],
+        }
+    )
+    if not any(r[2] is None for r in rows):
+        frame["price"] = frame["price"].astype("int64")
+    edges = [0, *cuts, len(rows)]
+    return [frame.iloc[a:b].reset_index(drop=True) for a, b in zip(edges, edges[1:])]
+
+
+def _rows_of(out):
+    import pandas as pd
+
+    return [
+        (r.seller, r.ts.to_pydatetime(), None if pd.isna(r.price) else int(r.price), r.isPriceBot)
+        for r in out.itertuples()
+    ]
+
+
+def _random_batch(rng, t0, first_tick):
+    """1-3 ticks of a few sellers, shuffled across ticks, with zero and
+    NULL prices, NULL-ts rows, repeated sellers and a tick that may hold
+    no positive price at all."""
+    rows = []
+    for tick in range(first_tick, first_tick + rng.randint(1, 3)):
+        ts = t0 + datetime.timedelta(minutes=tick)
+        dead = rng.random() < 0.2  # no positive price in this tick
+        for _ in range(rng.randint(1, 8)):
+            price = rng.choice([0, None, 1000, 1020, 1049, 1050, 1051, 1100, 5000])
+            if dead and price:
+                price = rng.choice([0, None])
+            rows.append((f"s{rng.randint(0, 4)}", ts, price))
+    for _ in range(rng.randint(0, 2)):
+        rows.append((f"s{rng.randint(0, 4)}", None, rng.choice([900, None])))
+    rng.shuffle(rows)
+    return rows
+
+
+def test_flag_group_matches_reference_on_random_groups():
+    """_flag_group against the pure-Python ring buffers over seeded
+    random micro-batches: several ticks per batch out of order, ticks
+    split across Arrow chunks, NULL and zero prices, NULL ts, repeated
+    sellers; outputs (in order) and decoded states must match."""
+    import json
+    import random
+
+    rng = random.Random(20251018)
+    t0 = datetime.datetime(2025, 9, 1, 12, 0, 0)
+    for trial in range(60):
+        state, bufs, tick = _GroupState(), {}, 0
+        for batch in range(rng.randint(1, 5)):
+            rows = _random_batch(rng, t0, tick)
+            tick += 4
+            cuts = sorted(rng.sample(range(1, len(rows)), min(2, len(rows) - 1)))
+            want = _reference_batch(bufs, rows)
+            (out,) = list(watch._flag_group(("v1",), _chunks(rows, cuts), state))
+            assert list(out.columns) == ["variantId", "seller", "ts", "price", "isPriceBot"]
+            assert (out["variantId"] == "v1").all()
+            assert _rows_of(out) == want, f"trial {trial} batch {batch}"
+            assert json.loads(state.value[0]) == bufs, f"trial {trial} batch {batch}"
+
+
+def test_flag_group_tick_without_positive_price_sets_no_bits():
+    import json
+
+    t0 = datetime.datetime(2025, 9, 1, 12, 0, 0)
+    rows = [("a", t0, 0), ("b", t0, None), ("c", t0, 0)]
+    state = _GroupState()
+    (out,) = list(watch._flag_group(("v1",), _chunks(rows, []), state))
+    assert len(out) == 3 and not out["isPriceBot"].any()
+    assert json.loads(state.value[0]) == {"a": [0], "b": [0], "c": [0]}
+
+
+def test_flag_group_null_ts_rows_are_dropped():
+    import json
+
+    t0 = datetime.datetime(2025, 9, 1, 12, 0, 0)
+    state = _GroupState()
+    (out,) = list(watch._flag_group(("v1",), _chunks([("a", None, 100)], []), state))
+    assert len(out) == 0 and json.loads(state.value[0]) == {}
+    rows = [("a", None, 100), ("b", t0, 500), ("a", None, 90)]
+    (out,) = list(watch._flag_group(("v1",), _chunks(rows, [1]), state))
+    assert _rows_of(out) == [("b", t0, 500, False)]
+    assert json.loads(state.value[0]) == {"b": [1]}  # no append for "a"
+
+
+def test_flag_group_repeated_seller_appends_in_input_order():
+    """A seller quoted twice in one tick appends both bits, in arrival
+    order, even where the tick is large enough for an unstable sort to
+    reorder equal keys."""
+    import json
+
+    t0 = datetime.datetime(2025, 9, 1, 12, 0, 0)
+    rows = [(f"f{i}", t0, 2000) for i in range(40)]
+    rows[3] = ("dup", t0, 1000)  # the tick minimum: undercut
+    rows[30] = ("dup", t0, 1500)  # 500 over: no undercut
+    rows[35] = ("dup", t0, 1040)  # inside the margin: undercut
+    state = _GroupState()
+    (out,) = list(watch._flag_group(("v1",), _chunks(rows, [17]), state))
+    assert json.loads(state.value[0])["dup"] == [1, 0, 1]
+    assert [r[0] for r in _rows_of(out)] == [r[0] for r in rows]
+
+
+def test_flag_group_resumes_from_encoded_state():
+    """A state written in the STATE_SCHEMA encoding ({seller: [bits]} as
+    JSON, as existing checkpoints hold it) resumes: the window keeps its
+    last 5 bits and a seller absent from the batch keeps its buffer."""
+    import json
+
+    t0 = datetime.datetime(2025, 9, 1, 12, 0, 0)
+    prior = {"bot": [1, 1, 0, 1, 0], "slow": [0, 0, 0, 0, 0], "gone": [1, 1, 1]}
+    state = _GroupState((json.dumps(prior),))
+    rows = [("bot", t0, 1000), ("slow", t0, 1900), ("new", t0, 1010)]
+    (out,) = list(watch._flag_group(("v1",), _chunks(rows, []), state))
+    assert _rows_of(out) == [
+        ("bot", t0, 1000, True),  # 1,0,1,0,1: three of five
+        ("slow", t0, 1900, False),
+        ("new", t0, 1010, False),
+    ]
+    assert json.loads(state.value[0]) == {
+        "bot": [1, 0, 1, 0, 1],
+        "slow": [0, 0, 0, 0, 0],
+        "gone": [1, 1, 1],
+        "new": [1],
+    }
+    bufs = dict(prior)
+    assert _reference_batch(bufs, rows) == _rows_of(out)
+
+
+def test_bot_flag_processor_uses_the_shared_kernel():
+    """transformWithStateInPandas' adapter, driven without Spark through
+    a stand-in handle: same outputs and same state encoding as
+    _flag_group on the same batches."""
+    import random
+
+    class ValueState:
+        def __init__(self):
+            self.value = None
+
+        def exists(self):
+            return self.value is not None
+
+        def get(self):
+            return self.value
+
+        def update(self, value):
+            self.value = value
+
+    class Handle:
+        def getValueState(self, name, schema):
+            self.state = ValueState()
+            return self.state
+
+    rng = random.Random(7)
+    t0 = datetime.datetime(2025, 9, 1, 12, 0, 0)
+    proc, handle, group_state = watch.BotFlagProcessor(), Handle(), _GroupState()
+    proc.init(handle)
+    for batch in range(6):
+        rows = _random_batch(rng, t0, 4 * batch)
+        (got,) = list(proc.handleInputRows(("v1",), iter(_chunks(rows, [1])), None))
+        (want,) = list(watch._flag_group(("v1",), _chunks(rows, [1]), group_state))
+        assert _rows_of(got) == _rows_of(want)
+        assert handle.state.value == group_state.value
+    proc.close()
+
+
+def _write_ticks(src, ticks, first):
+    """One NDJSON file per tick in the PRICE_WATCH_EVENTS layout; every
+    (variant, seller) quotes once per tick. Returns the reference rows
+    (variantId, seller, epoch_s, price)."""
+    import json
+    import random
+
+    rows_out = []
+    for tick in range(first, first + ticks):
+        rng = random.Random(tick)
+        epoch = 1_756_728_000 + 60 * tick
+        iso = datetime.datetime.fromtimestamp(epoch, datetime.timezone.utc).strftime(
+            "%Y-%m-%dT%H:%M:%SZ"
+        )
+        rows = [
+            (f"v{v}", f"s{s}", epoch, rng.choice([0, 1000 + rng.randint(-40, 160)]))
+            for v in range(4)
+            for s in range(5)
+        ]
+        with open(f"{src}/tick-{tick:03d}.json", "w") as f:
+            for variant, seller, _, price in rows:
+                f.write(json.dumps({"ts": iso, "masterProductId": "m", "variantId": variant,
+                                    "seller": seller, "price": price, "variantColor": "red"}) + "\n")
+        rows_out.append(rows)
+    return rows_out
+
+
+def _reference_stream(ticks):
+    bufs: dict = {}
+    out = []
+    for rows in ticks:
+        for variant in sorted({r[0] for r in rows}):
+            mine = [(s, t, p) for v, s, t, p in rows if v == variant]
+            got = _reference_batch(bufs.setdefault(variant, {}), mine)
+            out += [(variant, s, t, p, f) for s, t, p, f in got]
+    return sorted(out)
+
+
+def _read_flags(spark, sink):
+    from pyspark.sql import functions as F
+
+    got = spark.read.schema(
+        "variantId string, seller string, ts timestamp, price long, isPriceBot boolean"
+    ).json(sink)
+    return sorted(
+        tuple(r)
+        for r in got.select(
+            "variantId", "seller", F.unix_timestamp("ts"), "price", "isPriceBot"
+        ).collect()
+    )
+
+
+def test_watch_stream_job_feeds_the_kernel_four_columns(spark):
+    """Plan pin: the stateful operator's input is exactly the 4 columns
+    the kernel reads, whatever PRICE_WATCH_EVENTS carries besides."""
+    from kaspi_etl_spark.schemas import PRICE_WATCH_EVENTS
+
+    src = tempfile.mkdtemp(prefix="wsj4_src_")
+    try:
+        job = watch.watch_stream_job(spark, src, f"{src}/sink", f"{src}/ckpt")
+        plan = job._df._jdf.queryExecution().analyzed()
+        nodes, stack = [], [plan]
+        while stack:
+            node = stack.pop()
+            if node.nodeName() == "FlatMapGroupsInPandasWithState":
+                nodes.append(node)
+            it = node.children().iterator()
+            while it.hasNext():
+                stack.append(it.next())
+        assert len(nodes) == 1
+        it = nodes[0].child().output().iterator()
+        cols = []
+        while it.hasNext():
+            cols.append(it.next().name())
+        assert cols == ["variantId", "seller", "ts", "price"]
+        assert len(PRICE_WATCH_EVENTS.fields) > len(cols)
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+
+
+def test_watch_stream_job_restart_resumes_state(spark):
+    """Run ticks, stop, restart on the same checkpoint, run more ticks:
+    the ring buffers resume from the checkpointed state, and every flag
+    equals the pure-Python reference over all ticks. Each run drains its
+    backlog as one micro-batch, so batches hold several ticks."""
+    src = tempfile.mkdtemp(prefix="wsjr_src_")
+    sink = tempfile.mkdtemp(prefix="wsjr_sink_")
+    ckpt = tempfile.mkdtemp(prefix="wsjr_ckpt_")
+    try:
+        ticks = _write_ticks(src, 3, 0)
+        for run in range(2):
+            job = watch.watch_stream_job(spark, src, sink, ckpt)
+            q = job.trigger(availableNow=True).start()
+            q.awaitTermination(180)
+            assert q.exception() is None
+            assert _read_flags(spark, sink) == _reference_stream(ticks)
+            if run == 0:
+                ticks += _write_ticks(src, 4, 3)
+        # flags in ticks 3 and 4 need bits from before the restart: a
+        # restart that lost the state could not raise them
+        early = 1_756_728_000 + 60 * 5
+        assert any(f for _, _, ts, _, f in _reference_stream(ticks) if ts < early)
+    finally:
+        for d in (src, sink, ckpt):
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def test_drop_duplicates_within_watermark_stream(spark):
     """Streaming form of the events_dedup operator: duplicate event ids
     arriving within the watermark window are dropped; state is bounded by

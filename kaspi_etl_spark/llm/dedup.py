@@ -21,6 +21,8 @@ import functools
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import memo
+
 
 def md5_long(col: Column, salt: str = "") -> Column:
     """Deterministic 60-bit hash from md5 prefix — portable across engines
@@ -154,11 +156,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
 # odd multipliers/offsets (any SQL oracle can mirror the arithmetic).
 MINHASH_PRIME = 2147483647  # 2^31 - 1
 
-# Process-wide caches of pure expression trees (the litcache discipline:
-# EXPRESSIONS, never data or results). Keyed by the integer params that
-# shape the tree; all column references are fixed internal names.
-_SIG_EXPRS: dict[tuple, tuple] = {}
-_BAND_EXPRS: dict[tuple, tuple] = {}
 MINHASH_A = [1207959503, 2097151999, 1610612741, 805306457,
              402653189, 201326611, 100663319, 50331653,
              25165843, 12582917, 6291469, 3145739,
@@ -201,86 +198,32 @@ def minhash_signature(
     # guard: concat_ws over a NULL array would yield '' (not NULL), so
     # the build is gated on _w IS NOT NULL to reproduce the old NULL
     # text -> NULL signature semantics exactly.
-    # r12 (litcache discipline — expressions, never data/results): the
-    # idx/hash/signature trees are pure functions of (num_hashes,
-    # shingle_n) over fixed internal names (_w/_i/_h), and building
-    # them costs ~0.3 s of py4j round-trips per call site — cache the
-    # Column trees process-wide like the flog2/fexp2 kernels.
-    key = (num_hashes, shingle_n)
-    cached = _SIG_EXPRS.get(key)
-    if cached is None:
-        idx = F.sequence(
-            F.lit(0), F.greatest(F.size("_w") - shingle_n, F.lit(0))
-        )
+    # The idx/hash/signature trees are pure functions of (num_hashes,
+    # shingle_n) over fixed internal names (_w/_i/_h), and building them
+    # costs ~0.3 s of py4j round-trips per call site — memoized like
+    # the flog2/fexp2 kernels.
+    def trees():
+        idx = F.sequence(F.lit(0), F.greatest(F.size("_w") - shingle_n, F.lit(0)))
         shingle = F.concat_ws(
             " ",
-            *[
-                F.try_element_at(F.col("_w"), F.col("_i") + k + 1)
-                for k in range(shingle_n)
-            ],
+            *[F.try_element_at(F.col("_w"), F.col("_i") + k + 1) for k in range(shingle_n)],
         )
-        h = (
-            md5_long(F.when(F.col("_w").isNotNull(), shingle))
-            % F.lit(4294967296)
-        ).alias("_h")
+        h = (md5_long(F.when(F.col("_w").isNotNull(), shingle)) % F.lit(4294967296)).alias("_h")
         sigs = [
             F.min(
-                (F.lit(MINHASH_A[j]) * F.col("_h") + F.lit(MINHASH_B[j]))
-                % F.lit(MINHASH_PRIME)
+                (F.lit(MINHASH_A[j]) * F.col("_h") + F.lit(MINHASH_B[j])) % F.lit(MINHASH_PRIME)
             ).alias(f"sig_{j}")
             for j in range(num_hashes)
         ]
-        cached = (idx, h, tuple(sigs))
-        _SIG_EXPRS[key] = cached
-    idx, h, sigs = cached
+        return idx, h, tuple(sigs)
+
+    idx, h, sigs = memo.get(("minhash_sig", num_hashes, shingle_n), trees)
     ex = (
         docs.select(F.col(id_col), split_words(F.col(text_col)).alias("_w"))
         .select(F.col(id_col), "_w", F.explode_outer(idx).alias("_i"))
         .select(F.col(id_col), h)
     )
     return ex.groupBy(id_col).agg(*sigs)
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-) -> DataFrame:
-    """LSH banding: docs sharing any band (rows/band consecutive sig
-    values hashed together) become candidate pairs (id_a < id_b).
-
-    The self-join is on (band_idx, band_key) — a bucket equi-join, never
-    all-pairs. Output distinct candidate pairs.
-    """
-    rows_per_band = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"sig_{b * rows_per_band + r}").cast("string") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                md5_long(F.concat_ws("|", *parts)).alias("band_key"),
-            )
-        )
-    banded = signatures.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band")
-    ).select(id_col, "band.band_idx", "band.band_key")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col(f"a.band_idx") == F.col(f"b.band_idx"))
-            & (F.col(f"a.band_key") == F.col(f"b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
 
 
 def minhash_near_dup_pairs(
@@ -303,38 +246,33 @@ def minhash_near_dup_pairs(
     whole pipeline is two shuffles: groupBy bucket, groupBy pair.
     """
     sigs = minhash_signature(docs, text_col, id_col, num_hashes, shingle_n)
-    # r12: band/signature/match trees are pure functions of
-    # (num_hashes, bands) over the fixed sig_j names — cached like the
-    # signature expressions above (~0.3 s of py4j per call site).
-    key = (num_hashes, bands)
-    cached = _BAND_EXPRS.get(key)
-    if cached is None:
+    # band/signature/match trees are pure functions of (num_hashes,
+    # bands) over the fixed sig_j names — memoized like the signature
+    # trees above (~0.3 s of py4j per call site).
+    def trees():
         rows_per_band = num_hashes // bands
-        band_cols = []
-        for b in range(bands):
-            parts = [
-                F.col(f"sig_{b * rows_per_band + r}").cast("string")
-                for r in range(rows_per_band)
-            ]
-            band_cols.append(
-                F.struct(
-                    F.lit(b).alias("band_idx"),
-                    md5_long(F.concat_ws("|", *parts)).alias("band_key"),
-                )
+        band_cols = [
+            F.struct(
+                F.lit(b).alias("band_idx"),
+                md5_long(
+                    F.concat_ws(
+                        "|",
+                        *[F.col(f"sig_{b * rows_per_band + r}").cast("string")
+                          for r in range(rows_per_band)],
+                    )
+                ).alias("band_key"),
             )
-        sig_array = F.array(
-            *[F.col(f"sig_{j}") for j in range(num_hashes)]
-        ).alias("sig")
+            for b in range(bands)
+        ]
+        sig_array = F.array(*[F.col(f"sig_{j}") for j in range(num_hashes)]).alias("sig")
         band_explode = F.explode(F.array(*band_cols)).alias("band")
         n_match = sum(
-            F.when(
-                F.col("_x.sig").getItem(j) == F.col("_y.sig").getItem(j), 1
-            ).otherwise(0)
+            F.when(F.col("_x.sig").getItem(j) == F.col("_y.sig").getItem(j), 1).otherwise(0)
             for j in range(num_hashes)
         )
-        cached = (sig_array, band_explode, n_match)
-        _BAND_EXPRS[key] = cached
-    sig_array, band_explode, n_match = cached
+        return sig_array, band_explode, n_match
+
+    sig_array, band_explode, n_match = memo.get(("minhash_band", num_hashes, bands), trees)
     banded = sigs.select(
         F.col(id_col).alias("id"), sig_array, band_explode
     ).select("id", "sig", "band.band_idx", "band.band_key")

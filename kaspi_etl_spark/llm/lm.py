@@ -41,6 +41,7 @@ import math as _math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..litcache import array_lit
 from .text import extract_words
 
@@ -54,36 +55,34 @@ FLOG2_LUT = [
 ]
 
 
-# r12: the kernels are pure functions of the SOURCE COLUMN NAME, so the
-# whole expression tree is cached per name (the litcache discipline —
-# expressions, never data or results). The old 3-withColumn chain paid
+# The kernels are pure functions of the SOURCE COLUMN NAME, so the
+# whole expression tree is memoized per name (memo.py). The old 3-withColumn chain paid
 # ~0.1-0.25 s of driver latency PER CALL on deep plans (each withColumn
 # is a full analyzer pass + py4j chatter at ~1 ms/round-trip on this
 # host), times ~40 call sites. The named intermediate exponent column is
 # gone; its repeated subtree is deduplicated at runtime by Spark's
 # subexpression elimination (CPU measured flat on the flog2-heavy
 # consumers, see OPTIMIZATION_r12.md).
-_KERNEL_COLS: dict[tuple[str, str], Column] = {}
 
 
 def flog2_col(src: str) -> Column:
     """Fixed-point log2 of BIGINT column ``src`` (>= 1), scaled by 2^20
     (see module header), as one cached unresolved expression."""
-    col = _KERNEL_COLS.get(("flog2", src))
-    if col is None:
-        b = FLOG2_IDX_BITS
-        e = f"(length(bin({src})) - 1)"
-        idx = (
-            f"CAST((CASE WHEN {e} >= {b} THEN shiftright({src}, CAST({e} - {b} AS INT)) "
-            f"ELSE shiftleft({src}, CAST({b} - {e} AS INT)) END) - {FLOG2_TABLE} AS INT)"
-        )
-        # one array Literal (constant-folded), never F.array(*lits);
-        # array_lit: F.lit(list) pays ~2.4 s of py4j per call (r11)
-        col = F.expr(f"CAST({e} AS BIGINT)") * FLOG2_ONE + F.try_element_at(
-            array_lit(FLOG2_LUT, "bigint"), F.expr(idx) + F.lit(1)
-        )
-        _KERNEL_COLS[("flog2", src)] = col
-    return col
+    return memo.get(("flog2", src), lambda: _flog2_tree(src))
+
+
+def _flog2_tree(src: str) -> Column:
+    b = FLOG2_IDX_BITS
+    e = f"(length(bin({src})) - 1)"
+    idx = (
+        f"CAST((CASE WHEN {e} >= {b} THEN shiftright({src}, CAST({e} - {b} AS INT)) "
+        f"ELSE shiftleft({src}, CAST({b} - {e} AS INT)) END) - {FLOG2_TABLE} AS INT)"
+    )
+    # one array Literal (constant-folded), never F.array(*lits);
+    # array_lit: F.lit(list) pays ~2.4 s of py4j per call (r11)
+    return F.expr(f"CAST({e} AS BIGINT)") * FLOG2_ONE + F.try_element_at(
+        array_lit(FLOG2_LUT, "bigint"), F.expr(idx) + F.lit(1)
+    )
 
 
 def with_flog2(df: DataFrame, src: str, out: str) -> DataFrame:
@@ -1069,27 +1068,25 @@ def fexp2_col(src: str) -> Column:
     weight). r12: the domain-checked value rides inline (the old form
     REPLACED ``src`` with the checked copy — same values, since the
     assert either passes or kills the query)."""
-    col = _KERNEL_COLS.get(("fexp2", src))
-    if col is None:
-        checked = F.when(
-            F.assert_true(
-                F.col(src).between(0, FEXP2_MAX_E * FLOG2_ONE - 1),
-                f"with_fexp2: {src} must be in [0, {FEXP2_MAX_E} * 2^20)",
-            ).isNull(),
-            F.col(src),
-        )
-        idx = F.shiftright(checked % FLOG2_ONE, FLOG2_FRAC_BITS - FLOG2_IDX_BITS)
-        # call_function: F.shiftleft only takes an int shift amount, but
-        # the exponent here is a per-row column
-        col = F.call_function(
-            "shiftleft",
-            F.try_element_at(
-                array_lit(FEXP2_LUT, "bigint"), idx.cast("int") + F.lit(1)
-            ),
-            F.shiftright(checked, FLOG2_FRAC_BITS).cast("int"),
-        ).cast("long")
-        _KERNEL_COLS[("fexp2", src)] = col
-    return col
+    return memo.get(("fexp2", src), lambda: _fexp2_tree(src))
+
+
+def _fexp2_tree(src: str) -> Column:
+    checked = F.when(
+        F.assert_true(
+            F.col(src).between(0, FEXP2_MAX_E * FLOG2_ONE - 1),
+            f"with_fexp2: {src} must be in [0, {FEXP2_MAX_E} * 2^20)",
+        ).isNull(),
+        F.col(src),
+    )
+    idx = F.shiftright(checked % FLOG2_ONE, FLOG2_FRAC_BITS - FLOG2_IDX_BITS)
+    # call_function: F.shiftleft only takes an int shift amount, but
+    # the exponent here is a per-row column
+    return F.call_function(
+        "shiftleft",
+        F.try_element_at(array_lit(FEXP2_LUT, "bigint"), idx.cast("int") + F.lit(1)),
+        F.shiftright(checked, FLOG2_FRAC_BITS).cast("int"),
+    ).cast("long")
 
 
 def with_fexp2(df: DataFrame, src: str, out: str) -> DataFrame:

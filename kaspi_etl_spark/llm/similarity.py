@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..litcache import array_lit
 
 
@@ -178,13 +179,6 @@ def deterministic_planes(num_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-# r12 expression cache (litcache discipline): the bucket tree is ~2*P
-# Column ops over P planes (~0.4 s of py4j per lsh_topk call measured);
-# it is a pure function of (column NAME, plane values, unrolled), so
-# name-keyed callers reuse one tree process-wide.
-_BUCKET_EXPRS: dict[tuple, Column] = {}
-
-
 def hyperplane_bucket(
     vec: Column | str, planes: list[list[float]], unrolled: bool = False
 ) -> Column:
@@ -193,15 +187,12 @@ def hyperplane_bucket(
     the ~1M-row crossover documented on ``dot_fixed``); the default
     interpreted array-literal fold is faster at gate/bench scale and
     bit-identical (same left fold order). Pass ``vec`` as a column NAME
-    to get the process-wide cached expression tree; a Column argument
-    builds fresh (a general Column is not a cache key)."""
-    key = None
+    to get the memoized expression tree (~2*P Column ops over P planes,
+    ~0.4 s of py4j per lsh_topk call measured); a Column argument builds
+    fresh (a general Column is not a memo key)."""
     if isinstance(vec, str):
-        key = (vec, unrolled, tuple(tuple(p) for p in planes))
-        cached = _BUCKET_EXPRS.get(key)
-        if cached is not None:
-            return cached
-        vec = F.col(vec)
+        key = ("bucket", vec, unrolled, memo.digest(tuple(map(tuple, planes))))
+        return memo.get(key, lambda: hyperplane_bucket(F.col(vec), planes, unrolled))
     bucket = F.lit(0)
     for i, p in enumerate(planes):
         pd = (
@@ -210,8 +201,6 @@ def hyperplane_bucket(
             else dot(vec, array_lit([float(s) for s in p], "double"))
         )
         bucket = bucket + F.when(pd >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    if key is not None:
-        _BUCKET_EXPRS[key] = bucket
     return bucket
 
 

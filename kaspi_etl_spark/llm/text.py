@@ -78,16 +78,6 @@ def lang_id_from_words(
     return F.when(best["ns"] < 0, best["l"]).otherwise(F.lit(default))
 
 
-def lang_id(
-    text: Column,
-    default: str = "und",
-    markers: dict[str, list[str]] | None = None,
-) -> Column:
-    """Language ID from raw text. Convenience wrapper — hot paths should
-    materialize extract_words() first and use lang_id_from_words."""
-    return lang_id_from_words(extract_words(text), default, markers)
-
-
 def whitespace_token_count(text: Column) -> Column:
     """Whitespace tokenization count (empty/blank -> 0)."""
     t = F.trim(text)

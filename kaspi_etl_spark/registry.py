@@ -19,13 +19,14 @@ must match bit-for-bit:
 
 from __future__ import annotations
 
-import weakref
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import memo
 from .clean import (
     bool_from_text,
     dayfirst_date,
@@ -135,58 +136,27 @@ SQL_CUSTOMERS_FIT = """
 """
 
 
-# r12 (guide §1.2 driver-side + §6): EVERY spark.read.parquet call pays
-# ~90-110 ms of schema inference + file listing on this host — measured
-# warm, per call — and one bench pass makes 120+ of them (~12 s of the
-# total). The SCAN HANDLE (a lazy DataFrame over an immutable source
-# table) is reusable by construction: holding a table DataFrame for the
-# session lifetime is ordinary Spark practice, every action against it
-# re-executes the scan from the parquet files, and no data or results
-# are memoized — this is the litcache discipline applied to the scan
-# relation. Keyed per SparkSession (weakly — a new/stopped session
-# never sees another session's plans) and per (sf_dir, name). ONLY the
-# immutable $SPARK_GRAFT_SF_DIR source tables go through here; sink
-# round-trip paths (upsert targets, exports) build fresh scans because
-# their file sets change within a run.
-_SCAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
+# Source scans and the shared derivations composed from them are
+# memoized per session (memo.py): every spark.read.parquet call pays
+# ~90-110 ms of schema inference + file listing, and one bench pass makes
+# 120+ of them. Only the $SPARK_GRAFT_SF_DIR source tables go through
+# here; sink round-trip paths (upsert targets, exports) build fresh scans.
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    per = _SCAN_CACHE.get(spark)
-    if per is None:
-        per = {}
-        _SCAN_CACHE[spark] = per
-    df = per.get((sf_dir, name))
-    if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        per[(sf_dir, name)] = df
-    return df
+    path = f"{sf_dir}/{name}.parquet"
+    return memo.get((spark, "scan", path), lambda: spark.read.parquet(path), spark, path)
 
 
 def _plan_cache(fn):
-    """Cache a shared (spark, sf_dir) -> DataFrame builder's PLAN per
-    session — the _read discipline one level up. The decorated builders
-    (sellers_table, llm_docs, read_events, orders_kaspi, emb_augmented)
-    are pure compositions of cached source scans: lazy plans over the
-    immutable sf_dir tables, rebuilt identically by 10-22 registered
-    queries each (~0.05-0.15 s of py4j/analysis per rebuild). No data
-    or results are memoized; every action re-executes from parquet."""
-    import functools
+    """Memoize a shared (spark, sf_dir) -> DataFrame builder's lazy PLAN
+    per session, guarded by the tables its build read through _read. The
+    decorated builders (sellers_table, llm_docs, read_events,
+    orders_kaspi, emb_augmented, ...) are rebuilt identically by 10-22
+    registered queries each (~0.05-0.15 s of py4j/analysis per build)."""
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        per = _SCAN_CACHE.get(spark)
-        if per is None:
-            per = {}
-            _SCAN_CACHE[spark] = per
-        key = ("_plan", fn.__qualname__, sf_dir)
-        df = per.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            per[key] = df
-        return df
+        key = (spark, "plan", fn.__qualname__, sf_dir)
+        return memo.get(key, lambda: fn(spark, sf_dir), spark)
 
     return wrapped
 
@@ -8618,32 +8588,14 @@ def _lr_label_col():
 # re-running the 12-iteration trajectory on every call (the r6 bench
 # double-counted training 3x per rep; ~10 s of its headline total).
 # docs_logreg_weights still carries the full training-trajectory oracle.
-# Each entry holds the table's file fingerprint, so a corpus rewritten in
-# place retrains (and replaces the entry) instead of scoring with the old
-# model.
-_LR_WEIGHTS_CACHE: dict[str, tuple[tuple, list[int]]] = {}
-
-
-def _files_fingerprint(spark: SparkSession, path: str) -> tuple:
-    """(path, size, mtime) of every file under ``path``, through the
-    session's Hadoop filesystem: a cheap stand-in for the table's content."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    files = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).listFiles(jpath, True)
-    out = []
-    while files.hasNext():
-        st = files.next()
-        out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
-    return tuple(sorted(out))
-
-
+# The memo entry is guarded by documents.parquet's file listing, so a
+# corpus rewritten in place retrains instead of scoring with the old model.
 def _lr_weights(spark: SparkSession, sf_dir: str) -> list[int]:
-    key = sf_dir.rstrip("/")
-    fp = _files_fingerprint(spark, f"{key}/documents.parquet")
-    hit = _LR_WEIGHTS_CACHE.get(key)
-    if hit is None or hit[0] != fp:
-        d = _read(spark, sf_dir, "documents")
-        hit = _LR_WEIGHTS_CACHE[key] = (fp, clf_ops.train(d, _lr_label_col()))
-    return hit[1]
+    return memo.get(
+        ("logreg", sf_dir.rstrip("/")),
+        lambda: clf_ops.train(_read(spark, sf_dir, "documents"), _lr_label_col()),
+        spark,
+    )
 
 
 @register(

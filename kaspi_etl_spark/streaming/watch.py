@@ -11,17 +11,36 @@ Two implementations with an equivalence test between them (SURVEY.md 5):
 * ``bot_flags_replay`` — batch replay over historical events with a
   ``rowsBetween(-4, 0)`` window: the oracle-checkable form.
 * ``bot_flags_stream`` — Structured Streaming with keyed state holding the
-  ring buffer, checkpointed; the production form. State is bounded (5
-  numbers per key), so at 100 TB/day the state store scales with
-  #(variant, seller) pairs, not event volume. ``bot_flags_stream_v2`` is
-  the same job on transformWithStateInPandas.
+  ring buffers, checkpointed; the production form. State is bounded (5
+  bits per (variant, seller)), so at 100 TB/day the state store scales
+  with #(variant, seller) pairs, not event volume. ``bot_flags_stream_v2``
+  is the same job on transformWithStateInPandas.
 
 Both stream forms project the events to the 4 columns the update reads
-(variantId, seller, ts, price) before ``groupBy``, and both stateful
-adapters (``_flag_group``, ``BotFlagProcessor``) call one columnar kernel,
-``_roll_flags``: numpy tick minima and undercut bits per micro-batch, then
-a single pass over (seller, bit) to roll the ring buffers. No pandas row
+(variantId, seller, ts, price) plus ``bucket = pmod(xxhash64(variantId),
+STATE_BUCKETS)``, and group by the bucket alone, so one Python call covers
+every variant of a bucket and PySpark's per-group cost (state object,
+Arrow->pandas conversion, concat, output frame) is paid once per bucket,
+not once per variant. Both stateful adapters (``_flag_group``,
+``BotFlagProcessor``) call one columnar kernel, ``_roll_flags``: numpy
+(variant, tick) minima and undercut bits per micro-batch, then a single
+pass over (variant, seller, bit) to roll the ring buffers. No pandas row
 iteration runs inside the stateful operator.
+
+State layout: one ``STATE_SCHEMA`` row per bucket, ``(version,
+rings_json)``, holds the ring of every (variantId, seller) seen in the
+bucket, keyed by the raw values (a NULL seller and a seller named "None"
+are two rings). Consequences:
+
+* ``STATE_BUCKETS`` (and the hash) must not change under an existing
+  checkpoint: it re-keys every row. A checkpoint keyed otherwise — such as
+  the earlier per-variantId layout — fails at restart on the state key
+  schema (``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``) instead of restarting
+  with empty rings; a row of another ``STATE_VERSION`` fails in the kernel.
+* The stateful stage has work in at most ``STATE_BUCKETS`` tasks, however
+  many shuffle partitions the session has.
+* State writes are per bucket: a tick that quotes one variant of a bucket
+  rewrites the whole bucket row, every variant's rings included.
 
 Divergence note: the reference computes each tick's variant minimum over
 that tick's snapshot only; the replay form uses the variant's minimum over
@@ -32,6 +51,7 @@ variant, then the per-seller ring buffer.
 
 from __future__ import annotations
 
+import json
 from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, Window
@@ -65,10 +85,22 @@ def bot_flags_replay(events: DataFrame, order_cols: list[str] | None = None) -> 
     )
 
 
-# State mirrors the reference's Map<variant, Map<seller, window[]>>
-# (price_watch.ts:31): one state row per variant holding every seller's
-# ring buffer, JSON-encoded (bounded: 5 ints per seller).
-STATE_SCHEMA = T.StructType([T.StructField("buffers_json", T.StringType())])
+# One state row per bucket of variantId holds every variant's per-seller
+# ring buffers (the reference's Map<variant, Map<seller, window[]>>,
+# price_watch.ts:31). Changing STATE_BUCKETS, or how a variantId maps to
+# its bucket, re-keys every checkpoint.
+STATE_BUCKETS = 64
+STATE_VERSION = 2
+# ``rings_json`` is [[variantId, [seller, ...], [ring, ...]], ...]: raw
+# variantId and seller values, NULLs included. A ring is the last
+# WINDOW_TICKS undercut bits as one number, newest bit lowest; a seller
+# with fewer ticks has zeros above them, which count like no tick at all.
+STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("version", T.IntegerType()),
+        T.StructField("rings_json", T.StringType()),
+    ]
+)
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -85,42 +117,75 @@ _OUT_COLS = [f.name for f in _OUT_SCHEMA.fields]
 
 # The only columns the stateful update reads. Both stream forms project to
 # them before groupBy, so each group converts 4 Arrow columns to pandas and
-# the shuffle carries nothing else, however wide the event schema grows.
+# the shuffle carries nothing else (the bucket aside), however wide the
+# event schema grows.
 _KERNEL_COLS = ["variantId", "seller", "ts", "price"]
 
+_RING_MASK = (1 << WINDOW_TICKS) - 1
+_RING_BITS = [bin(ring).count("1") for ring in range(_RING_MASK + 1)]
 
-def _roll_flags(variant: Any, chunks: Iterable[Any], buffers_json: str | None):
-    """The per-variant update shared by both stateful APIs —
-    price_watch.ts:31-52 over one micro-batch of one variant.
 
-    Every tick (distinct ts) is scored against its minimum positive price
-    over all sellers, and each seller's ring buffer of the last 5 undercut
-    bits rolls once per row. ``chunks`` are the group's pandas frames: a
-    group larger than arrow.maxRecordsPerBatch arrives as several, and a
-    tick split across them must still get one minimum and one append per
-    row, so they are concatenated first. Rows with a NULL ts belong to no
-    tick: no output, no append. Rows keep their input order within a tick
+def _with_bucket(events: DataFrame) -> DataFrame:
+    """The stateful operator's input in both stream forms: the 4 kernel
+    columns plus ``bucket``, variantId's state bucket (a NULL variantId
+    hashes to one fixed bucket, like any value)."""
+    bucket = F.pmod(F.xxhash64("variantId"), F.lit(STATE_BUCKETS))
+    return events.select(*_KERNEL_COLS, bucket.alias("bucket"))
+
+
+def _load_rings(row: Any) -> dict:
+    """A ``STATE_SCHEMA`` row (or None) -> {variantId: {seller: ring}}.
+    A row of another layout version fails: its rings cannot be read."""
+    if row is None:
+        return {}
+    version, rings_json = row
+    if version != STATE_VERSION:
+        raise ValueError(
+            f"price-watch state row has layout version {version}, this code reads "
+            f"{STATE_VERSION}; restart on a new checkpoint"
+        )
+    return {v: dict(zip(sellers, rings)) for v, sellers, rings in json.loads(rings_json)}
+
+
+def _dump_rings(rings: dict) -> tuple:
+    doc = [[v, list(ring), list(ring.values())] for v, ring in rings.items()]
+    return STATE_VERSION, json.dumps(doc, separators=(",", ":"))
+
+
+def _roll_flags(chunks: Iterable[Any], state: Any):
+    """The per-bucket update shared by both stateful APIs —
+    price_watch.ts:31-52 over one micro-batch of every variant in a bucket.
+
+    Every (variant, tick) — a tick is a distinct ts — is scored against its
+    minimum positive price over all sellers, and each (variant, seller)
+    ring buffer of the last 5 undercut bits rolls once per row. ``chunks``
+    are the group's pandas frames: a group larger than
+    arrow.maxRecordsPerBatch arrives as several, and a tick split across
+    them must still get one minimum and one append per row, so they are
+    concatenated first. Rows with a NULL ts belong to no tick: no output,
+    no append. Rows keep their input order within a (variant, tick)
     (stable sort), so a seller seen twice in a tick appends in that order.
 
-    Everything but the ring buffers is columnar: a stable argsort, one
-    ``np.minimum.reduceat`` over each tick's run of rows for the minima,
-    one vector of undercut bits; the buffers then roll in a single pass
-    over (seller, bit). Returns (output frame, new ``buffers_json``) — the
-    state stays a JSON ``{seller: [bits]}`` so existing checkpoints
-    resume."""
-    import json
-
+    Everything but the ring buffers is columnar: a stable ``np.lexsort``
+    by (variant, ts), one ``np.minimum.reduceat`` over each (variant, tick)
+    run of rows for the minima, one vector of undercut bits; the rings
+    then roll in a single pass over (variant, seller, bit). ``state`` is a
+    ``STATE_SCHEMA`` row or None; returns (output frame, new state row)."""
     import numpy as np
     import pandas as pd
 
-    bufs: dict[str, list[int]] = json.loads(buffers_json) if buffers_json else {}
+    rings = _load_rings(state)
     frames = [pdf for pdf in chunks if len(pdf)] or [pd.DataFrame(columns=_KERNEL_COLS)]
     whole = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
     ts = whole["ts"].to_numpy()
     rows = np.flatnonzero(~pd.isna(ts))
     if not len(rows):
-        return pd.DataFrame(columns=_OUT_COLS), json.dumps(bufs)
-    rows = rows[np.argsort(ts[rows], kind="stable")]
+        return pd.DataFrame(columns=_OUT_COLS), _dump_rings(rings)
+    variants = whole["variantId"].to_numpy()[rows]
+    # NULL is a variant of its own; codes only order the rows.
+    codes = pd.factorize(variants, use_na_sentinel=False)[0]
+    order = np.lexsort((ts[rows], codes))
+    rows, codes, variants = rows[order], codes[order], variants[order]
     ts = ts[rows]
     price = whole["price"].to_numpy()[rows]
     sellers = whole["seller"].to_numpy()[rows]
@@ -130,33 +195,42 @@ def _roll_flags(variant: Any, chunks: Iterable[Any], buffers_json: str | None):
     top = (np.finfo if price.dtype.kind == "f" else np.iinfo)(price.dtype).max
     positive = price > 0  # NULL (NaN) and zero prices never undercut
     quote = np.where(positive, price, top)
-    starts = np.flatnonzero(np.concatenate(([True], ts[1:] != ts[:-1])))
+    new_variant = np.concatenate(([True], codes[1:] != codes[:-1]))
+    starts = np.flatnonzero(new_variant | np.concatenate(([True], ts[1:] != ts[:-1])))
     line = np.repeat(np.minimum.reduceat(quote, starts), np.diff(starts, append=len(ts)))
     # quote - line never overflows: a positive quote is >= its tick's
     # minimum, and a tick without one has line == quote == top.
     bits = (positive & (quote - line <= UNDERCUT_MARGIN)).astype(np.int8).tolist()
 
-    flags = []
-    for seller, bit in zip(map(str, sellers), bits):
-        rec = bufs.setdefault(seller, [])
-        rec.append(bit)
-        del rec[:-WINDOW_TICKS]
-        flags.append(sum(rec) >= FLAG_THRESHOLD)
-    # Keys in _OUT_COLS order: a columns= argument would cost a reindex,
-    # 2-3x the construction itself at 40 rows a group. The arrays are
-    # fresh (fancy-indexed), so they need no copy.
+    rolled = []
+    firsts = np.flatnonzero(new_variant).tolist()
+    for a, b in zip(firsts, firsts[1:] + [len(rows)]):
+        ring = rings.setdefault(variants[a], {})
+        for seller, bit in zip(sellers[a:b].tolist(), bits[a:b]):
+            r = (ring.get(seller, 0) << 1 | bit) & _RING_MASK
+            ring[seller] = r
+            rolled.append(_RING_BITS[r])
+    # Keys in _OUT_COLS order: a columns= argument would cost a reindex.
+    # The arrays are fresh (fancy-indexed), so they need no copy.
     out = pd.DataFrame(
-        {"variantId": variant, "seller": sellers, "ts": ts, "price": price, "isPriceBot": flags},
+        {
+            "variantId": variants,
+            "seller": sellers,
+            "ts": ts,
+            "price": price,
+            "isPriceBot": np.array(rolled) >= FLAG_THRESHOLD,
+        },
         copy=False,
     )
-    return out, json.dumps(bufs)
+    return out, _dump_rings(rings)
 
 
 def _flag_group(key: tuple, pdfs: Iterable[Any], state: Any):
-    """applyInPandasWithState adapter of ``_roll_flags``, keyed by
-    variantId; the group state is the one-field ``STATE_SCHEMA`` row."""
-    out, buffers_json = _roll_flags(key[0], pdfs, state.get[0] if state.exists else None)
-    state.update((buffers_json,))
+    """applyInPandasWithState adapter of ``_roll_flags``. The key is the
+    state bucket; rows carry their own variantId. The group state is one
+    ``STATE_SCHEMA`` row."""
+    out, row = _roll_flags(pdfs, state.get if state.exists else None)
+    state.update(row)
     yield out
 
 
@@ -164,17 +238,18 @@ def bot_flags_stream(events: DataFrame) -> DataFrame:
     """T2 streaming form: keyed ring-buffer state via applyInPandasWithState.
 
     ``events`` is a streaming DataFrame with at least variantId, seller,
-    ts and price; only those 4 columns reach the shuffle and the Python
-    worker. Keyed by variantId so each group sees all sellers of a tick —
-    the tick's minimum is computed inside the stateful operator (the
-    ``_roll_flags`` kernel) exactly like the reference's per-tick pass,
-    with no streaming aggregation or stream-stream join needed. State per
-    key is #sellers x 5 ints, so the state store scales with distinct
-    (variant, seller), not event volume.
+    ts and price; only those 4 columns (and the bucket) reach the shuffle
+    and the Python worker. Keyed by the state bucket of variantId, so each
+    group sees all sellers of each of its variants' ticks — the tick's
+    minimum is computed inside the stateful operator (the ``_roll_flags``
+    kernel) exactly like the reference's per-tick pass, with no streaming
+    aggregation or stream-stream join needed. State is #sellers x 5 bits
+    per variant, so the state store scales with distinct (variant,
+    seller), not event volume.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    return events.select(*_KERNEL_COLS).groupBy("variantId").applyInPandasWithState(
+    return _with_bucket(events).groupBy("bucket").applyInPandasWithState(
         _flag_group,
         outputStructType=_OUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
@@ -201,23 +276,16 @@ def tws_available() -> bool:
 class BotFlagProcessor(StatefulProcessor):
     """transformWithStateInPandas form of the T2 ring-buffer detector —
     the Spark 4 replacement for applyInPandasWithState, with typed state
-    variables and RocksDB-ready layout. Keyed by variantId; the value
-    state holds every seller's last-5 undercut bits in the same JSON
-    encoding as ``STATE_SCHEMA``, and ``handleInputRows`` is an adapter of
-    the same ``_roll_flags`` kernel as ``_flag_group``."""
+    variables and RocksDB-ready layout. Keyed by the state bucket; the
+    value state is a ``STATE_SCHEMA`` row, and ``handleInputRows`` is an
+    adapter of the same ``_roll_flags`` kernel as ``_flag_group``."""
 
     def init(self, handle) -> None:
-        from pyspark.sql import types as T
-
-        self._bufs = handle.getValueState(
-            "buffers_json", T.StructType([T.StructField("j", T.StringType())])
-        )
+        self._rings = handle.getValueState("rings", STATE_SCHEMA)
 
     def handleInputRows(self, key, rows, timer_values):
-        out, buffers_json = _roll_flags(
-            key[0], rows, self._bufs.get()[0] if self._bufs.exists() else None
-        )
-        self._bufs.update((buffers_json,))
+        out, row = _roll_flags(rows, self._rings.get() if self._rings.exists() else None)
+        self._rings.update(row)
         yield out
 
     def close(self) -> None:
@@ -226,9 +294,9 @@ class BotFlagProcessor(StatefulProcessor):
 
 def bot_flags_stream_v2(events: DataFrame) -> DataFrame:
     """T2 on the transformWithStateInPandas API (Spark 4). Same kernel,
-    projection and semantics as bot_flags_stream; tests assert
+    projection, bucketing and semantics as bot_flags_stream; tests assert
     equivalence with the batch replay."""
-    return events.select(*_KERNEL_COLS).groupBy("variantId").transformWithStateInPandas(
+    return _with_bucket(events).groupBy("bucket").transformWithStateInPandas(
         statefulProcessor=BotFlagProcessor(),
         outputStructType=_OUT_SCHEMA,
         outputMode="append",
@@ -270,23 +338,33 @@ _DUE_STATE_SCHEMA = T.StructType([T.StructField("last_run_epoch", T.DoubleType()
 
 
 def _due_group_factory(interval_min: float):
+    interval_us = interval_min * 60e6
+
     def _due_group(key: tuple, pdfs: Iterable[Any], state: Any):
         """T4: per-SKU schedule gating (BUNDLE/scripts/scripts/
         price_watch.ts:47-67) — emit a tick only when intervalMin has
-        elapsed since the last emitted tick for this key."""
+        elapsed since the last emitted tick for this key. Rows with a NULL
+        ts are no tick and are dropped. The gate walks one sorted array of
+        epoch micros over all of the group's chunks, one ``searchsorted``
+        per emitted tick; the state keeps epoch seconds."""
+        import numpy as np
         import pandas as pd
 
-        last = state.get[0] if state.exists else None
-        out = []
-        for pdf in pdfs:
-            for ts in sorted(pdf["ts"]):
-                epoch = ts.timestamp()
-                if last is None or epoch - last >= interval_min * 60:
-                    out.append({"sku": key[0], "ts": ts})
-                    last = epoch
+        ts = np.concatenate(
+            [pdf["ts"].to_numpy() for pdf in pdfs] or [np.array([], "datetime64[us]")]
+        )
+        ts = np.sort(ts[~pd.isna(ts)])
+        us = ts.astype("datetime64[us]").view(np.int64)
+        last = round(state.get[0] * 1e6) if state.exists else None
+        due = []
+        at = 0 if last is None else int(np.searchsorted(us, last + interval_us))
+        while at < len(us):
+            due.append(at)
+            last = int(us[at])
+            at = max(at + 1, int(np.searchsorted(us, last + interval_us)))
         if last is not None:
-            state.update((float(last),))
-        yield pd.DataFrame(out, columns=["sku", "ts"])
+            state.update((last / 1e6,))
+        yield pd.DataFrame({"sku": [key[0]] * len(due), "ts": ts[due]})
 
     return _due_group
 

@@ -130,39 +130,33 @@ def test_stream_v2_matches_replay(spark):
 
 
 def test_flag_group_chunked_tick_single_min():
-    """A variant group larger than arrow.maxRecordsPerBatch arrives as
+    """A bucket group larger than arrow.maxRecordsPerBatch arrives as
     multiple pandas chunks. A ts tick split across chunks must still be
-    scored against ONE tick minimum over the whole group, with exactly
-    one ring-buffer append per seller — not per fragment."""
-    import json
-
+    scored against ONE minimum per (variant, tick) over the whole group,
+    with exactly one ring-buffer append per seller — not per fragment."""
     import pandas as pd
 
-    class FakeState:
-        exists = False
-        get = None
-
-        def update(self, value):
-            self.value = value
-
     t0 = datetime.datetime(2025, 9, 1, 12, 0, 0)
-    # One tick split across two chunks: the true minimum (9000) is only
-    # in the second chunk. Unfixed per-chunk logic would see vmin=10000
-    # in chunk 1 and flag "bot" as undercutting; the whole-group minimum
-    # puts it 1000 over (margin is 50), so its undercut bit must be 0.
+    # One tick split across two chunks: v1's true minimum (9000) is only
+    # in the second chunk. Per-chunk logic would see vmin=10000 in chunk 1
+    # and flag v1's "bot" as undercutting; the whole-group minimum puts it
+    # 1000 over (margin is 50), so its undercut bit must be 0. v2 shares
+    # the bucket and the tick, but its minimum is its own.
     c1 = pd.DataFrame(
-        {"variantId": ["v1"], "seller": ["bot"], "ts": [t0], "price": [10000]}
+        {"variantId": ["v1", "v2"], "seller": ["bot", "bot"], "ts": [t0, t0],
+         "price": [10000, 10000]}
     )
     c2 = pd.DataFrame(
         {"variantId": ["v1"], "seller": ["anchor"], "ts": [t0], "price": [9000]}
     )
-    state = FakeState()
-    (out,) = list(watch._flag_group(("v1",), [c1, c2], state))
-    assert len(out) == 2  # one output row per seller for the tick
-    bufs = json.loads(state.value[0])
-    assert bufs["bot"] == [0]  # scored against the cross-chunk minimum
-    assert bufs["anchor"] == [1]
-    assert all(len(v) == 1 for v in bufs.values())  # no double appends
+    state = _GroupState()
+    (out,) = list(watch._flag_group((7,), [c1, c2], state))
+    assert len(out) == 3  # one output row per (variant, seller) for the tick
+    assert _decoded(state) == {  # one append each, against each variant's minimum
+        ("v1", "bot"): [0, 0, 0, 0, 0],
+        ("v1", "anchor"): [0, 0, 0, 0, 1],
+        ("v2", "bot"): [0, 0, 0, 0, 1],
+    }
 
 
 # --- the shared price-watch kernel, driven without Spark -------------------
@@ -186,41 +180,62 @@ class _GroupState:
         self.value = value
 
 
-def _reference_batch(bufs, rows):
-    """Pure-Python reference for one variant's micro-batch
-    (price_watch.ts:31-52): rows are (seller, ts, price) in arrival order,
-    price None for NULL. NULL-ts rows are dropped; ticks run in ts order,
-    rows of a tick in arrival order; the tick's minimum positive price sets
-    the undercut line. Rolls ``bufs`` ({seller: [bits]}) in place and
-    returns [(seller, ts, price, isPriceBot)]."""
+def _reference_batch(rings, rows):
+    """Pure-Python reference for one bucket's micro-batch
+    (price_watch.ts:31-52): rows are (variantId, seller, ts, price) in
+    arrival order, None for NULL. NULL-ts rows are dropped; variants run
+    in order of first appearance, a variant's ticks in ts order and the
+    rows of a tick in arrival order; the (variant, tick) minimum positive
+    price sets the undercut line. Rolls ``rings`` ({(variantId, seller):
+    [bits]}, NULLs included in the key) in place and returns
+    [(variantId, seller, ts, price, isPriceBot)]."""
     out = []
-    for ts in sorted({r[1] for r in rows if r[1] is not None}):
-        tick = [r for r in rows if r[1] == ts]
-        positive = [p for _, _, p in tick if p is not None and p > 0]
-        line = min(positive) if positive else None
-        for seller, _, price in tick:
-            bit = int(line is not None and price is not None and 0 < price <= line + 50)
-            buf = bufs.setdefault(seller, [])
-            buf.append(bit)
-            del buf[:-5]
-            out.append((seller, ts, price, sum(buf) >= 3))
+    timed = [r for r in rows if r[2] is not None]
+    for variant in dict.fromkeys(r[0] for r in timed):
+        mine = [r for r in timed if r[0] == variant]
+        for ts in sorted({r[2] for r in mine}):
+            tick = [r for r in mine if r[2] == ts]
+            positive = [p for *_, p in tick if p is not None and p > 0]
+            line = min(positive) if positive else None
+            for _, seller, _, price in tick:
+                bit = int(line is not None and price is not None and 0 < price <= line + 50)
+                buf = rings.setdefault((variant, seller), [])
+                buf.append(bit)
+                del buf[:-5]
+                out.append((variant, seller, ts, price, sum(buf) >= 3))
     return out
 
 
+def _decoded(state):
+    """A bucket's state row as {(variantId, seller): last 5 bits, oldest
+    first}; a ring with fewer ticks reads zeros before them."""
+    return {
+        (variant, seller): [ring >> i & 1 for i in range(4, -1, -1)]
+        for variant, by_seller in watch._load_rings(state.value).items()
+        for seller, ring in by_seller.items()
+    }
+
+
+def _padded(rings):
+    return {key: [0] * (5 - len(bits)) + bits for key, bits in rings.items()}
+
+
 def _chunks(rows, cuts):
-    """Arrow-shaped pandas chunks of (seller, ts, price) rows: a NULL
-    price makes the column float64 with NaN, a NULL ts is NaT."""
+    """Arrow-shaped pandas chunks of (variantId, seller, ts, price) rows,
+    with the bucket column the stream adds: a NULL price makes the column
+    float64 with NaN, a NULL ts is NaT."""
     import pandas as pd
 
     frame = pd.DataFrame(
         {
-            "variantId": ["v1"] * len(rows),
-            "seller": [r[0] for r in rows],
-            "ts": pd.to_datetime([r[1] for r in rows]),
-            "price": [float("nan") if r[2] is None else r[2] for r in rows],
+            "variantId": [r[0] for r in rows],
+            "seller": [r[1] for r in rows],
+            "ts": pd.to_datetime([r[2] for r in rows]),
+            "price": [float("nan") if r[3] is None else r[3] for r in rows],
+            "bucket": [7] * len(rows),
         }
     )
-    if not any(r[2] is None for r in rows):
+    if not any(r[3] is None for r in rows):
         frame["price"] = frame["price"].astype("int64")
     edges = [0, *cuts, len(rows)]
     return [frame.iloc[a:b].reset_index(drop=True) for a, b in zip(edges, edges[1:])]
@@ -230,125 +245,144 @@ def _rows_of(out):
     import pandas as pd
 
     return [
-        (r.seller, r.ts.to_pydatetime(), None if pd.isna(r.price) else int(r.price), r.isPriceBot)
+        (r.variantId, r.seller, r.ts.to_pydatetime(),
+         None if pd.isna(r.price) else int(r.price), r.isPriceBot)
         for r in out.itertuples()
     ]
 
 
+_VARIANTS = ["v1", "v2", "v3", "None", None]
+_SELLERS = ["s0", "s1", "s2", "None", None]
+
+
 def _random_batch(rng, t0, first_tick):
-    """1-3 ticks of a few sellers, shuffled across ticks, with zero and
-    NULL prices, NULL-ts rows, repeated sellers and a tick that may hold
-    no positive price at all."""
+    """1-3 ticks of a few variants and sellers, shuffled across ticks,
+    with zero and NULL prices, NULL-ts rows, NULL variantIds and sellers
+    next to ones named "None", repeated sellers and a (variant, tick) that
+    may hold no positive price at all."""
     rows = []
+    variants = rng.sample(_VARIANTS, rng.randint(1, 4))
     for tick in range(first_tick, first_tick + rng.randint(1, 3)):
         ts = t0 + datetime.timedelta(minutes=tick)
-        dead = rng.random() < 0.2  # no positive price in this tick
-        for _ in range(rng.randint(1, 8)):
-            price = rng.choice([0, None, 1000, 1020, 1049, 1050, 1051, 1100, 5000])
-            if dead and price:
-                price = rng.choice([0, None])
-            rows.append((f"s{rng.randint(0, 4)}", ts, price))
+        for variant in variants:
+            dead = rng.random() < 0.2  # no positive price in this tick
+            for _ in range(rng.randint(1, 6)):
+                price = rng.choice([0, None, 1000, 1020, 1049, 1050, 1051, 1100, 5000])
+                if dead and price:
+                    price = rng.choice([0, None])
+                rows.append((variant, rng.choice(_SELLERS), ts, price))
     for _ in range(rng.randint(0, 2)):
-        rows.append((f"s{rng.randint(0, 4)}", None, rng.choice([900, None])))
+        rows.append((rng.choice(variants), rng.choice(_SELLERS), None, rng.choice([900, None])))
     rng.shuffle(rows)
     return rows
 
 
 def test_flag_group_matches_reference_on_random_groups():
     """_flag_group against the pure-Python ring buffers over seeded
-    random micro-batches: several ticks per batch out of order, ticks
-    split across Arrow chunks, NULL and zero prices, NULL ts, repeated
-    sellers; outputs (in order) and decoded states must match."""
-    import json
+    random bucket micro-batches of several variants each: several ticks
+    per batch out of order, ticks split across Arrow chunks, NULL and zero
+    prices, NULL ts, NULL variantIds and sellers, repeated sellers;
+    outputs (in order) and decoded states must match."""
     import random
 
     rng = random.Random(20251018)
     t0 = datetime.datetime(2025, 9, 1, 12, 0, 0)
     for trial in range(60):
-        state, bufs, tick = _GroupState(), {}, 0
+        state, rings, tick = _GroupState(), {}, 0
         for batch in range(rng.randint(1, 5)):
             rows = _random_batch(rng, t0, tick)
             tick += 4
             cuts = sorted(rng.sample(range(1, len(rows)), min(2, len(rows) - 1)))
-            want = _reference_batch(bufs, rows)
-            (out,) = list(watch._flag_group(("v1",), _chunks(rows, cuts), state))
+            want = _reference_batch(rings, rows)
+            (out,) = list(watch._flag_group((7,), _chunks(rows, cuts), state))
             assert list(out.columns) == ["variantId", "seller", "ts", "price", "isPriceBot"]
-            assert (out["variantId"] == "v1").all()
             assert _rows_of(out) == want, f"trial {trial} batch {batch}"
-            assert json.loads(state.value[0]) == bufs, f"trial {trial} batch {batch}"
+            assert _decoded(state) == _padded(rings), f"trial {trial} batch {batch}"
 
 
 def test_flag_group_tick_without_positive_price_sets_no_bits():
-    import json
-
     t0 = datetime.datetime(2025, 9, 1, 12, 0, 0)
-    rows = [("a", t0, 0), ("b", t0, None), ("c", t0, 0)]
+    rows = [("v1", "a", t0, 0), ("v1", "b", t0, None), ("v1", "c", t0, 0), ("v2", "a", t0, 5)]
     state = _GroupState()
-    (out,) = list(watch._flag_group(("v1",), _chunks(rows, []), state))
-    assert len(out) == 3 and not out["isPriceBot"].any()
-    assert json.loads(state.value[0]) == {"a": [0], "b": [0], "c": [0]}
+    (out,) = list(watch._flag_group((7,), _chunks(rows, []), state))
+    assert len(out) == 4 and not out["isPriceBot"].any()
+    assert _decoded(state) == {
+        ("v1", "a"): [0] * 5, ("v1", "b"): [0] * 5, ("v1", "c"): [0] * 5,
+        ("v2", "a"): [0, 0, 0, 0, 1],
+    }
 
 
 def test_flag_group_null_ts_rows_are_dropped():
-    import json
-
     t0 = datetime.datetime(2025, 9, 1, 12, 0, 0)
     state = _GroupState()
-    (out,) = list(watch._flag_group(("v1",), _chunks([("a", None, 100)], []), state))
-    assert len(out) == 0 and json.loads(state.value[0]) == {}
-    rows = [("a", None, 100), ("b", t0, 500), ("a", None, 90)]
-    (out,) = list(watch._flag_group(("v1",), _chunks(rows, [1]), state))
-    assert _rows_of(out) == [("b", t0, 500, False)]
-    assert json.loads(state.value[0]) == {"b": [1]}  # no append for "a"
+    (out,) = list(watch._flag_group((7,), _chunks([("v1", "a", None, 100)], []), state))
+    assert len(out) == 0 and _decoded(state) == {}
+    rows = [("v1", "a", None, 100), ("v1", "b", t0, 500), ("v2", "a", None, 90)]
+    (out,) = list(watch._flag_group((7,), _chunks(rows, [1]), state))
+    assert _rows_of(out) == [("v1", "b", t0, 500, False)]
+    assert _decoded(state) == {("v1", "b"): [0, 0, 0, 0, 1]}  # no append for "a"
 
 
 def test_flag_group_repeated_seller_appends_in_input_order():
     """A seller quoted twice in one tick appends both bits, in arrival
     order, even where the tick is large enough for an unstable sort to
-    reorder equal keys."""
-    import json
-
+    reorder equal keys, and another variant's rows interleave."""
     t0 = datetime.datetime(2025, 9, 1, 12, 0, 0)
-    rows = [(f"f{i}", t0, 2000) for i in range(40)]
-    rows[3] = ("dup", t0, 1000)  # the tick minimum: undercut
-    rows[30] = ("dup", t0, 1500)  # 500 over: no undercut
-    rows[35] = ("dup", t0, 1040)  # inside the margin: undercut
+    rows = [(f"v{i % 2}", f"f{i}", t0, 2000) for i in range(40)]
+    rows[4] = ("v0", "dup", t0, 1000)  # the tick minimum: undercut
+    rows[30] = ("v0", "dup", t0, 1500)  # 500 over: no undercut
+    rows[36] = ("v0", "dup", t0, 1040)  # inside the margin: undercut
     state = _GroupState()
-    (out,) = list(watch._flag_group(("v1",), _chunks(rows, [17]), state))
-    assert json.loads(state.value[0])["dup"] == [1, 0, 1]
-    assert [r[0] for r in _rows_of(out)] == [r[0] for r in rows]
+    (out,) = list(watch._flag_group((7,), _chunks(rows, [17]), state))
+    assert _decoded(state)[("v0", "dup")] == [0, 0, 1, 0, 1]
+    assert [r[:2] for r in _rows_of(out)] == [r[:2] for r in rows if r[0] == "v0"] + [
+        r[:2] for r in rows if r[0] == "v1"
+    ]
 
 
 def test_flag_group_resumes_from_encoded_state():
-    """A state written in the STATE_SCHEMA encoding ({seller: [bits]} as
-    JSON, as existing checkpoints hold it) resumes: the window keeps its
-    last 5 bits and a seller absent from the batch keeps its buffer."""
+    """A state row written in the ``STATE_SCHEMA`` layout resumes: each
+    ring keeps its last 5 bits, and a seller or variant absent from the
+    batch keeps its ring. A row of another layout version fails rather
+    than restart the rings."""
     import json
 
+    import pytest
+
     t0 = datetime.datetime(2025, 9, 1, 12, 0, 0)
-    prior = {"bot": [1, 1, 0, 1, 0], "slow": [0, 0, 0, 0, 0], "gone": [1, 1, 1]}
-    state = _GroupState((json.dumps(prior),))
-    rows = [("bot", t0, 1000), ("slow", t0, 1900), ("new", t0, 1010)]
-    (out,) = list(watch._flag_group(("v1",), _chunks(rows, []), state))
+    prior = {("v1", "bot"): [1, 1, 0, 1, 0], ("v1", "slow"): [0, 0, 0, 0, 0],
+             ("v1", "gone"): [1, 1, 1], (None, None): [1, 1], ("v9", "x"): [1]}
+    rings_json = json.dumps([
+        ["v1", ["bot", "slow", "gone"], [0b11010, 0, 0b111]],
+        [None, [None], [0b11]],
+        ["v9", ["x"], [1]],
+    ])
+    state = _GroupState((watch.STATE_VERSION, rings_json))
+    rows = [("v1", "bot", t0, 1000), ("v1", "slow", t0, 1900), ("v1", "new", t0, 1010),
+            (None, None, t0, 7)]
+    (out,) = list(watch._flag_group((7,), _chunks(rows, []), state))
     assert _rows_of(out) == [
-        ("bot", t0, 1000, True),  # 1,0,1,0,1: three of five
-        ("slow", t0, 1900, False),
-        ("new", t0, 1010, False),
+        ("v1", "bot", t0, 1000, True),  # 1,0,1,0,1: three of five
+        ("v1", "slow", t0, 1900, False),
+        ("v1", "new", t0, 1010, False),
+        (None, None, t0, 7, True),  # 1,1,1
     ]
-    assert json.loads(state.value[0]) == {
-        "bot": [1, 0, 1, 0, 1],
-        "slow": [0, 0, 0, 0, 0],
-        "gone": [1, 1, 1],
-        "new": [1],
-    }
-    bufs = dict(prior)
-    assert _reference_batch(bufs, rows) == _rows_of(out)
+    rings = {k: list(v) for k, v in prior.items()}
+    assert _reference_batch(rings, rows) == _rows_of(out)
+    assert _decoded(state) == _padded(rings)
+    assert state.value == (watch.STATE_VERSION, json.dumps([
+        ["v1", ["bot", "slow", "gone", "new"], [0b10101, 0, 0b111, 1]],
+        [None, [None], [0b111]],
+        ["v9", ["x"], [1]],
+    ], separators=(",", ":")))
+    with pytest.raises(ValueError, match="layout version 1"):
+        list(watch._flag_group((7,), _chunks(rows, []), _GroupState((1, "{}"))))
 
 
 def test_bot_flag_processor_uses_the_shared_kernel():
     """transformWithStateInPandas' adapter, driven without Spark through
-    a stand-in handle: same outputs and same state encoding as
-    _flag_group on the same batches."""
+    a stand-in handle: same outputs and same state row as _flag_group on
+    the same multi-variant bucket batches."""
     import random
 
     class ValueState:
@@ -366,6 +400,7 @@ def test_bot_flag_processor_uses_the_shared_kernel():
 
     class Handle:
         def getValueState(self, name, schema):
+            assert schema == watch.STATE_SCHEMA
             self.state = ValueState()
             return self.state
 
@@ -375,17 +410,21 @@ def test_bot_flag_processor_uses_the_shared_kernel():
     proc.init(handle)
     for batch in range(6):
         rows = _random_batch(rng, t0, 4 * batch)
-        (got,) = list(proc.handleInputRows(("v1",), iter(_chunks(rows, [1])), None))
-        (want,) = list(watch._flag_group(("v1",), _chunks(rows, [1]), group_state))
+        (got,) = list(proc.handleInputRows((7,), iter(_chunks(rows, [1])), None))
+        (want,) = list(watch._flag_group((7,), _chunks(rows, [1]), group_state))
         assert _rows_of(got) == _rows_of(want)
         assert handle.state.value == group_state.value
     proc.close()
 
 
+_STREAM_VARIANTS = 24
+
+
 def _write_ticks(src, ticks, first):
     """One NDJSON file per tick in the PRICE_WATCH_EVENTS layout; every
-    (variant, seller) quotes once per tick. Returns the reference rows
-    (variantId, seller, epoch_s, price)."""
+    (variant, seller) quotes once per tick, and 24 variants over 64
+    buckets share some. Returns the reference rows (variantId, seller,
+    epoch_s, price)."""
     import json
     import random
 
@@ -398,7 +437,7 @@ def _write_ticks(src, ticks, first):
         )
         rows = [
             (f"v{v}", f"s{s}", epoch, rng.choice([0, 1000 + rng.randint(-40, 160)]))
-            for v in range(4)
+            for v in range(_STREAM_VARIANTS)
             for s in range(5)
         ]
         with open(f"{src}/tick-{tick:03d}.json", "w") as f:
@@ -410,13 +449,10 @@ def _write_ticks(src, ticks, first):
 
 
 def _reference_stream(ticks):
-    bufs: dict = {}
+    rings: dict = {}
     out = []
     for rows in ticks:
-        for variant in sorted({r[0] for r in rows}):
-            mine = [(s, t, p) for v, s, t, p in rows if v == variant]
-            got = _reference_batch(bufs.setdefault(variant, {}), mine)
-            out += [(variant, s, t, p, f) for s, t, p, f in got]
+        out += _reference_batch(rings, rows)
     return sorted(out)
 
 
@@ -434,9 +470,17 @@ def _read_flags(spark, sink):
     )
 
 
+def _names(seq):
+    it, names = seq.iterator(), []
+    while it.hasNext():
+        names.append(it.next().name())
+    return names
+
+
 def test_watch_stream_job_feeds_the_kernel_four_columns(spark):
-    """Plan pin: the stateful operator's input is exactly the 4 columns
-    the kernel reads, whatever PRICE_WATCH_EVENTS carries besides."""
+    """Plan pin: the stateful operator is grouped by the state bucket
+    alone, and its input is exactly the 4 columns the kernel reads plus
+    the bucket, whatever PRICE_WATCH_EVENTS carries besides."""
     from kaspi_etl_spark.schemas import PRICE_WATCH_EVENTS
 
     src = tempfile.mkdtemp(prefix="wsj4_src_")
@@ -452,14 +496,23 @@ def test_watch_stream_job_feeds_the_kernel_four_columns(spark):
             while it.hasNext():
                 stack.append(it.next())
         assert len(nodes) == 1
-        it = nodes[0].child().output().iterator()
-        cols = []
-        while it.hasNext():
-            cols.append(it.next().name())
-        assert cols == ["variantId", "seller", "ts", "price"]
-        assert len(PRICE_WATCH_EVENTS.fields) > len(cols)
+        assert _names(nodes[0].groupingAttributes()) == ["bucket"]
+        cols = _names(nodes[0].child().output())
+        assert cols == ["variantId", "seller", "ts", "price", "bucket"]
+        assert len(PRICE_WATCH_EVENTS.fields) > len(cols) - 1
     finally:
         shutil.rmtree(src, ignore_errors=True)
+
+
+def test_state_buckets_are_pinned(spark):
+    """The bucket count and the variantId -> bucket map key every
+    checkpoint: changing either re-keys state written before the change."""
+    assert watch.STATE_BUCKETS == 64
+    events = spark.createDataFrame(
+        [("v0000",), ("v0001",), ("v0499",), (None,)], "variantId string"
+    ).selectExpr("variantId", "'s' AS seller", "current_timestamp() AS ts", "1L AS price")
+    got = [tuple(r) for r in watch._with_bucket(events).select("variantId", "bucket").collect()]
+    assert got == [("v0000", 35), ("v0001", 58), ("v0499", 19), (None, 42)]
 
 
 def test_watch_stream_job_restart_resumes_state(spark):
@@ -484,6 +537,57 @@ def test_watch_stream_job_restart_resumes_state(spark):
         # restart that lost the state could not raise them
         early = 1_756_728_000 + 60 * 5
         assert any(f for _, _, ts, _, f in _reference_stream(ticks) if ts < early)
+    finally:
+        for d in (src, sink, ckpt):
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def test_watch_stream_job_refuses_a_per_variant_checkpoint(spark):
+    """A checkpoint whose state is keyed by variantId (the layout before
+    state buckets: one JSON {seller: [bits]} row per variant) must not
+    resume under the bucket layout with empty rings: the restart fails on
+    the state key schema."""
+    import pytest
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from kaspi_etl_spark.schemas import PRICE_WATCH_EVENTS
+
+    def per_variant(key, pdfs, state):
+        import json
+
+        import pandas as pd
+
+        state.update((json.dumps({"s0": [1]}),))
+        yield pd.DataFrame(columns=watch._OUT_COLS)
+
+    src = tempfile.mkdtemp(prefix="wsjx_src_")
+    sink = tempfile.mkdtemp(prefix="wsjx_sink_")
+    ckpt = tempfile.mkdtemp(prefix="wsjx_ckpt_")
+    try:
+        _write_ticks(src, 1, 0)
+        old = (
+            spark.readStream.schema(PRICE_WATCH_EVENTS).json(src)
+            .select(*watch._KERNEL_COLS)
+            .groupBy("variantId")
+            .applyInPandasWithState(
+                per_variant,
+                outputStructType=watch._OUT_SCHEMA,
+                stateStructType="buffers_json string",
+                outputMode="append",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            )
+        )
+        q = (old.writeStream.format("json").option("path", sink)
+             .option("checkpointLocation", ckpt).trigger(availableNow=True).start())
+        q.awaitTermination(180)
+        assert q.exception() is None
+        _write_ticks(src, 1, 1)
+        q = watch.watch_stream_job(spark, src, sink, ckpt).trigger(availableNow=True).start()
+        try:
+            with pytest.raises(Exception, match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"):
+                q.awaitTermination(180)
+        finally:
+            q.stop()
     finally:
         for d in (src, sink, ckpt):
             shutil.rmtree(d, ignore_errors=True)

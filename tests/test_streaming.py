@@ -417,6 +417,57 @@ def test_bot_flag_processor_uses_the_shared_kernel():
     proc.close()
 
 
+def _due_reference(last, stamps, interval_min):
+    """Pure-Python T4 gate over one micro-batch: ``stamps`` in any order,
+    None for NULL (no tick); a stamp is due when it is at least
+    interval_min after the last due one, or there is none yet. Returns
+    (due stamps, new last)."""
+    step = datetime.timedelta(minutes=interval_min)
+    due = []
+    for ts in sorted(t for t in stamps if t is not None):
+        if last is None or ts - last >= step:
+            due.append(ts)
+            last = ts
+    return due, last
+
+
+def test_due_group_matches_reference():
+    """_due_group against the pure-Python gate over seeded random
+    micro-batches: NULL ts, equal ts, unsorted stamps split across chunks
+    and state resumed from the previous batch."""
+    import random
+
+    import pandas as pd
+
+    rng = random.Random(4)
+    t0 = datetime.datetime(2025, 9, 1, 12, 0, 0)
+    for trial in range(80):
+        interval = rng.choice([0.0, 0.5, 1.0, 2.5, 5.0])
+        gate = watch._due_group_factory(interval)
+        state, last, clock = _GroupState(), None, 0
+        for batch in range(rng.randint(1, 4)):
+            stamps = []
+            for _ in range(rng.randint(0, 12)):
+                clock += rng.choice([0, 0, 1, 29_999_999, 30_000_000, 90_000_000, 150_000_000])
+                stamps.append(t0 + datetime.timedelta(microseconds=clock))
+            stamps += [rng.choice(stamps) for _ in range(rng.randint(0, 3)) if stamps]
+            stamps += [None] * rng.randint(0, 2)
+            rng.shuffle(stamps)
+            frame = pd.DataFrame({"sku": "k", "ts": pd.to_datetime(stamps)})
+            cuts = sorted(rng.randint(0, len(stamps)) for _ in range(2))
+            chunks = [frame.iloc[a:b] for a, b in zip([0, *cuts], [*cuts, len(stamps)])]
+            want, last = _due_reference(last, stamps, interval)
+            (out,) = list(gate(("k",), iter(chunks), state))
+            assert list(out.columns) == ["sku", "ts"]
+            assert (out["sku"] == "k").all()
+            assert [t.to_pydatetime() for t in out["ts"]] == want, f"trial {trial}"
+            if last is None:
+                assert not state.exists
+            else:
+                epoch = last.replace(tzinfo=datetime.timezone.utc).timestamp()
+                assert state.value == (epoch,), f"trial {trial}"
+
+
 _STREAM_VARIANTS = 24
 
 
